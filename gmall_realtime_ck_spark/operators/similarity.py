@@ -659,8 +659,10 @@ def topk_two_sided_exact(t: dict[str, DataFrame]) -> DataFrame:
         ).cast("int")
     )
     return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .withColumn("_max_bd", F.max("bd").over(wq))
+        # _max_bd before rank: the rank <= TOP_K filter must sit directly
+        # on the row_number window, or Spark plans no WindowGroupLimit
+        rescored.withColumn("_max_bd", F.max("bd").over(wq))
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select(
             "q_id",

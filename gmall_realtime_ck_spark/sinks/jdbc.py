@@ -61,12 +61,16 @@ def parquet_batch_writer(path: str, partition_by: tuple[str, ...] = (), mode: st
     """Container-friendly stand-in for the OLAP sink with the same
     foreachBatch contract — DWS outputs land date-partitioned like the
     reference's ``PARTITION parYYYYMMDD`` tables
-    (PUB/mapper/TradeStatsMapper.java:27)."""
+    (PUB/mapper/TradeStatsMapper.java:27). A partitioned write is
+    hash-repartitioned on the partition columns first, so each batch
+    adds one file per date partition instead of one per (task, date)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        w = batch_df.write.mode(mode)
         if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
+            batch_df.repartition(*partition_by).write.mode(mode).partitionBy(
+                *partition_by
+            ).parquet(path)
+        else:
+            batch_df.write.mode(mode).parquet(path)
 
     return write

@@ -157,9 +157,12 @@ def _run_to_memory(
     (window/dedup/join/applyInPandasWithState) creates one state store
     per shuffle partition and the per-store commit overhead dominates
     bounded runs (measured on the stream-stream join at sf0.1:
-    32 partitions → 6.6 s, 8 → 2.1 s, same results). Production sizes
-    this to key cardinality instead. The prior value is restored
-    afterwards so the caller's session is untouched.
+    32 partitions → 6.6 s, 8 → 2.1 s, same results). Sessions from
+    ``session.get_spark`` already default to one partition per task
+    slot for the same reason; the scoping keeps bounded runs cheap on
+    sessions built elsewhere (a vanilla ``SparkSession.builder``
+    session, ``tools/preflight.py``'s 32 partitions). The prior value is
+    restored afterwards so the caller's session is untouched.
 
     No-data micro-batches are disabled by default for the run (r13):
     after the last data batch, AvailableNow otherwise appends an extra

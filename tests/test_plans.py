@@ -997,10 +997,10 @@ def test_two_sided_exact_is_keyed_join(tables, monkeypatch):
     point of the chunk-id is to turn exact Q×C scoring into co-located
     per-chunk work whose wall-clock divides across executors.
 
-    The candidate set is localCheckpoint-pinned since r14 (the guard's
-    boundary aggregate is a second plan reference), which would hide
-    the propose subtree behind the pin — so the pin is neutralized
-    here to audit the FULL pipeline shape in one plan."""
+    The candidate set is a single plan reference with no pin (the
+    guard's boundary max rides the ranking window). localCheckpoint is
+    still neutralized here, so a pin reintroduced later cannot hide the
+    propose subtree from this audit of the FULL pipeline shape."""
     # Spark 4: pyspark.sql.DataFrame is the ABC; the session builds
     # pyspark.sql.classic.dataframe.DataFrame instances — patch there.
     from pyspark.sql.classic.dataframe import DataFrame

@@ -214,13 +214,21 @@ def test_keyword_pipeline_stream_equals_batch(spark, tmp_path):
 
 
 def test_foreach_batch_parquet_sink(spark, tmp_path):
+    """A date-partitioned sink write adds one file per date partition
+    per batch, even when the batch's rows for one date are spread over
+    many tasks (here: a fixed-count repartition on event_type, which AQE
+    does not coalesce)."""
+    from pathlib import Path
+
     from gmall_realtime_ck_spark.sinks.jdbc import parquet_batch_writer
 
     ev = pipelines.events_file_stream(spark, SF_DIR)
     out_dir = str(tmp_path / "dws_out")
 
     def transform(df):
-        return df.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("cur_date")).count()
+        return df.select(
+            F.date_format("ts", "yyyy-MM-dd").alias("cur_date"), "event_type"
+        ).repartition(4, "event_type")
 
     q = pipelines.foreach_batch_pipeline(
         ev, transform, parquet_batch_writer(out_dir, partition_by=("cur_date",))
@@ -228,9 +236,60 @@ def test_foreach_batch_parquet_sink(spark, tmp_path):
     q.awaitTermination()
     written = spark.read.parquet(out_dir)
     assert written.count() > 0
-    assert "cur_date=2024-01-01" in str(
-        [p.name for p in __import__("pathlib").Path(out_dir).iterdir()]
-    )
+    parts = [p for p in Path(out_dir).iterdir() if p.name.startswith("cur_date=")]
+    assert "cur_date=2024-01-01" in [p.name for p in parts]
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    for part in parts:
+        assert len(list(part.glob("*.parquet"))) <= n_batches, part
+
+
+def test_daily_uv_checkpoint_keeps_its_partition_count(spark, tmp_path):
+    """Migration contract behind the session's shuffle-partition default:
+    a stateful query restarted under a different
+    ``spark.sql.shuffle.partitions`` keeps the count recorded in its
+    checkpoint's offset metadata, so its state stays addressable and no
+    (user, date) pair already flagged is flagged uv=1 again."""
+    import json
+    from pathlib import Path
+
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    src.mkdir()
+    schema = "user_id long, cur_date string"
+
+    def feed(name, pairs):
+        with open(src / name, "w") as f:
+            for u, d in pairs:
+                f.write(json.dumps({"user_id": u, "cur_date": d}) + "\n")
+
+    def run(partitions):
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        rows = []
+        q = (
+            state.daily_uv_flags(spark.readStream.schema(schema).json(str(src)))
+            .writeStream.foreachBatch(lambda df, _: rows.extend(df.collect()))
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return {(r["user_id"], r["cur_date"]): r["uv"] for r in rows}
+
+    first = [(u, "2024-01-01") for u in range(1, 9)]
+    repeated, new = first[:5], [(u, "2024-01-02") for u in range(1, 4)] + [(9, "2024-01-01")]
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        feed("b0.json", first)
+        assert run(3) == {p: 1 for p in first}
+        feed("b1.json", repeated + new)
+        got = run(5)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert got == {**{p: 0 for p in repeated}, **{p: 1 for p in new}}
+    offsets = (ckpt / "offsets" / "1").read_text().splitlines()
+    assert json.loads(offsets[1])["conf"]["spark.sql.shuffle.partitions"] == "3"
+    assert sorted(p.name for p in Path(ckpt, "state", "0").iterdir()
+                  if p.name.isdigit()) == ["0", "1", "2"]
 
 
 def test_kafka_sink_builders_construct(spark):
