@@ -71,13 +71,12 @@ def merge_dim_batch(
             "row_key", "data", "op", "ts"
         )
         path = os.path.join(store_dir, table)
-        try:
+        merged = batch
+        if os.path.isdir(path):  # an unreadable store raises: never overwrite it
             existing = spark.read.parquet(path).select(
                 "row_key", "data", F.lit("U").alias("op"), "ts"
             )
             merged = existing.unionByName(batch)
-        except Exception:
-            merged = batch
         w = Window.partitionBy("row_key").orderBy(F.desc("ts"), F.desc("op"))
         snapshot = (
             merged.withColumn("rn", F.row_number().over(w))
@@ -114,14 +113,9 @@ def scd2_merge(
     ``changes``: dim_changes() output filtered to one sink_table.
     Returns the new history DataFrame (also persisted).
     """
-    import os
-
     path = os.path.join(store_dir, table + "_scd2")
     batch = changes.select("row_key", "data", "op", "ts")
-    try:
-        hist = spark.read.parquet(path)
-    except Exception:
-        hist = None
+    hist = spark.read.parquet(path) if os.path.isdir(path) else None
 
     w = Window.partitionBy("row_key").orderBy("ts", "op")
     versioned = (
@@ -175,8 +169,6 @@ def scd2_merge(
 def dim_as_of(spark: SparkSession, store_dir: str, table: str, ts: int) -> DataFrame:
     """Point-in-time dimension snapshot from the SCD2 history — the
     as-of join input for backfills (valid_from ≤ ts < valid_to)."""
-    import os
-
     hist = spark.read.parquet(os.path.join(store_dir, table + "_scd2"))
     return hist.filter(
         (F.col("valid_from") <= ts)

@@ -229,6 +229,37 @@ def test_dim_pipeline_merge(db_raw, spark, tmp_path):
     assert snaps2["dim_sku_info"].filter(F.col("row_key") == "0").count() == 0
 
 
+def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
+    """A DIM store that exists but cannot be read (a torn part file
+    listed first) makes the merge raise; it must never be replaced by
+    the batch alone. Only a missing store starts from the batch."""
+    import json
+    import os
+
+    def sku_lines(ids, ts):
+        return [
+            json.dumps({"database": "gmall", "table": "sku_info", "type": "insert",
+                        "ts": ts, "data": {"id": str(i), "sku_name": f"sku{i}"}})
+            for i in ids
+        ]
+
+    def merge(lines):
+        raw = spark.createDataFrame([(l,) for l in lines], "value string")
+        return dim.run_dim_pipeline(spark, raw, fixtures.TABLE_PROCESS_DIM_ROWS, store)
+
+    store = str(tmp_path / "dimstore")
+    assert merge(sku_lines(range(100), 1))["dim_sku_info"].count() == 100
+    path = os.path.join(store, "dim_sku_info")
+    schema = spark.read.parquet(path).schema
+    with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+        f.write(b"torn")  # sorts before every part file Spark wrote
+
+    with pytest.raises(Exception):
+        merge(sku_lines([100], 2))
+    kept = spark.read.schema(schema).option("ignoreCorruptFiles", "true").parquet(path)
+    assert kept.count() == 100
+
+
 # ---------------------------------------------------------------------------
 # DWS
 # ---------------------------------------------------------------------------

@@ -7,11 +7,14 @@ end-to-end metric each side's median and quartiles, the pairs the
 change won (ties count for neither side) and the median change against
 the bound ``BENCHMARK.json`` fixes. Every run is a fresh process with
 the run length ``BENCHMARK.json`` sets, so both sides run identical
-settings. Check the parent out beside the working tree first:
+settings. Export the parent beside the working tree first:
 
-    git worktree add /tmp/parent HEAD~1
+    mkdir /tmp/parent && git archive HEAD~1 | tar -x -C /tmp/parent
     python tools/perf_ab.py /tmp/parent . --workload pipelines --seed 7 --pairs 10
-    git worktree remove /tmp/parent
+
+``--trace 1`` compares traced runs against traced runs instead and
+prints, for every per-layer metric the result JSON holds, the same
+medians, quartiles and pairs won (no bound applies to those).
 
 A gain is claimed (``claim: yes``) only when the change wins at least
 nine tenths of the pairs and the medians differ by more than the
@@ -30,11 +33,12 @@ import subprocess
 import sys
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> tuple[dict, dict]:
+def run_once(checkout: str, workload: str, seed: int, seconds: float,
+             trace: int) -> tuple[dict, dict]:
     """One ``perfbench/run.py`` run; returns its closing JSON line and
     its ``record`` line."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     out = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
     lines = out.stdout.strip().splitlines()
     if out.returncode != 0 or not lines:
@@ -52,7 +56,8 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 def summarize(spec: dict, base: list[float], head: list[float]) -> str:
     """One report line for a metric: medians, quartiles, pairs won,
-    median change against the bound, and whether a gain may be claimed."""
+    median change against the bound (end-to-end metrics only), and
+    whether a gain may be claimed."""
     sign = 1.0 if spec["better"] == "lower" else -1.0
     pairs = [(b, h) for b, h in zip(base, head) if b is not None and h is not None]
     if not pairs:
@@ -63,13 +68,15 @@ def summarize(spec: dict, base: list[float], head: list[float]) -> str:
     lost = sum(1 for b, h in zip(base, head) if sign * (h - b) > 0)
     worse = sign * (hq[1] - bq[1]) / bq[1] if bq[1] else 0.0
     claim = won >= 0.9 * len(base) and abs(hq[1] - bq[1]) > bq[2] - bq[0]
+    bound = ""
+    if "bound" in spec:
+        bound = (f"worse {worse:+.1%} of bound {spec['bound']:.0%} "
+                 f"{'REGRESSION' if worse > spec['bound'] else 'ok'} ")
     return (f"{spec['name']} [{spec['unit']}] "
             f"parent {bq[1]:.4g} (q1 {bq[0]:.4g}, q3 {bq[2]:.4g}) "
             f"change {hq[1]:.4g} (q1 {hq[0]:.4g}, q3 {hq[2]:.4g}) "
             f"ratio {hq[1] / bq[1] if bq[1] else float('nan'):.3f} "
-            f"won {won}/{len(base)} lost {lost} "
-            f"worse {worse:+.1%} of bound {spec['bound']:.0%} "
-            f"{'REGRESSION' if worse > spec['bound'] else 'ok'} "
+            f"won {won}/{len(base)} lost {lost} {bound}"
             f"claim {'yes' if claim else 'no'}")
 
 
@@ -80,26 +87,30 @@ def main(argv=None) -> int:
     p.add_argument("--workload", required=True)
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--pairs", type=int, default=10)
+    p.add_argument("--trace", type=int, choices=(0, 1), default=0,
+                   help="1: traced runs on both sides, per-layer metrics")
     args = p.parse_args(argv)
     with open(os.path.join(args.head, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    specs = bench["end_to_end"]
+    specs = bench["per_layer" if args.trace else "end_to_end"]
     values = {"base": {s["name"]: [] for s in specs}, "head": {s["name"]: [] for s in specs}}
     failed = {"base": [0, 0], "head": [0, 0]}
     for i in range(args.pairs):
         order = ("base", "head") if i % 2 == 0 else ("head", "base")
         for side in order:
             res, record = run_once(getattr(args, side), args.workload, args.seed,
-                                   bench["run_seconds"])
+                                   bench["run_seconds"], args.trace)
             failed[side][0] += res["failed"]
             failed[side][1] += res["attempted"]
             got = {n: m["value"] for n, m in res["metrics"].items()}
             for s in specs:
-                values[side][s["name"]].append(got[s["name"]])
+                values[side][s["name"]].append(got.get(s["name"]))
+            named = record["named"]
             print(f"pair {i} {side} correct={res['correct']} "
                   + " ".join(f"{n}={v}" for n, v in got.items())
-                  + f" host_steal_share={record['named']['host_steal_share']}", flush=True)
-    print(f"workload {args.workload} seed {args.seed} pairs {args.pairs}")
+                  + "".join(f" {n}={named[n]}" for n in ("fresh_reads", "host_steal_share")
+                            if n in named), flush=True)
+    print(f"workload {args.workload} seed {args.seed} pairs {args.pairs} trace {args.trace}")
     for side in ("base", "head"):
         f, a = failed[side]
         print(f"{'parent' if side == 'base' else 'change'} fail_ratio {f / max(a, 1):.4g} ({f}/{a})")
