@@ -83,7 +83,6 @@ def traffic_page_view_window(page: DataFrame, size: str = "10 seconds") -> DataF
     """
     et = F.timestamp_millis("ts")
     day = cst_date(et)
-    w_uv = Window.partitionBy(F.col("common.mid"), day).orderBy("ts")
     flagged = page.select(
         F.col("common.vc").alias("vc"),
         F.col("common.ch").alias("ch"),
@@ -264,32 +263,3 @@ def province_order_window(
         )
         agg = agg.join(prov, "province_id", "left")
     return agg
-
-
-def serving_gmv(province_window: DataFrame, cur_date: str) -> DataFrame:
-    """PUB/mapper/TradeStatsMapper.java:27 — GMV for one date;
-    WHERE cur_date replaces PARTITION parYYYYMMDD."""
-    return province_window.filter(F.col("cur_date") == cur_date).agg(
-        F.sum("order_amount").alias("gmv")
-    )
-
-
-def serving_province_amounts(province_window: DataFrame, cur_date: str) -> DataFrame:
-    """PUB/mapper/TradeStatsMapper.java:31."""
-    return (
-        province_window.filter(F.col("cur_date") == cur_date)
-        .groupBy("province_name")
-        .agg(F.sum("order_amount").alias("total_amount"))
-        .orderBy("total_amount")
-    )
-
-
-def serving_channel_uv_topk(traffic_window: DataFrame, cur_date: str, limit: int = 5) -> DataFrame:
-    """PUB/mapper/TrafficStatsMapper.java:24."""
-    return (
-        traffic_window.filter(F.col("cur_date") == cur_date)
-        .groupBy("ch")
-        .agg(F.sum("uv_ct").alias("uv_ct"))
-        .orderBy(F.desc("uv_ct"), F.asc("ch"))
-        .limit(limit)
-    )

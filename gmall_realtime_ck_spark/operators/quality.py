@@ -184,8 +184,8 @@ def quality_value_histogram(t: dict[str, DataFrame]) -> DataFrame:
 
 def value_histogram(events: DataFrame) -> DataFrame:
     """Shared batch/stream histogram transform (see
-    ``quality_value_histogram``; streaming twin
-    ``streaming.pipelines.flow_histogram`` — the bucketing is a
+    ``quality_value_histogram``; streaming twin ``flow_histogram``, a
+    ``streaming.pipelines.BATCH_TWINS`` row — the bucketing is a
     stateless map, so only the keyed aggregate becomes stateful)."""
     ev = events.select(
         "event_type", F.expr("cast(round(value * 100) as bigint)").alias("v")

@@ -49,9 +49,9 @@ def win_cumulate_counts(t: dict[str, DataFrame]) -> DataFrame:
 
 def cumulate_counts(events: DataFrame) -> DataFrame:
     """Shared batch/stream CUMULATE transform (see win_cumulate_counts;
-    streaming twin: streaming.pipelines.flow_cumulate). The explode is
-    stateless, so the same code runs on a stream; only the final
-    aggregation becomes stateful there (complete mode)."""
+    streaming twin: flow_cumulate, a streaming.pipelines.BATCH_TWINS
+    row). The explode is stateless, so the same code runs on a stream;
+    only the final aggregation becomes stateful there (complete mode)."""
     ev = events.select("ts", "event_type", "value")
     step_us = CUMULATE_STEP_HOURS * 3_600_000_000
     fan = ev.withColumn("day0", F.date_trunc("day", F.col("ts"))).withColumn(

@@ -68,10 +68,34 @@ BUILDERS, ORACLES = _collect()
 def _collect_streaming() -> tuple[dict[str, Callable], dict[str, str]]:
     from .streaming import pipelines
 
-    return dict(pipelines.STREAM_BUILDERS), pipelines.stream_oracles()
+    builders, oracles = dict(pipelines.STREAM_BUILDERS), pipelines.stream_oracles()
+    streams = {
+        "events": pipelines.events_file_stream,
+        "documents": pipelines.documents_file_stream,
+    }
+
+    def twin(name: str, batch: str, table: str, mode: str) -> Callable:
+        builder, file_stream = BUILDERS[batch], streams[table]
+
+        def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return pipelines._run_to_memory(builder({table: file_stream(spark, sf_dir)}), mode)
+
+        run.__name__ = run.__qualname__ = name
+        run.__doc__ = (
+            f"``{batch}`` run unchanged on the {table} file stream in {mode}"
+            f" mode; its batch oracle applies verbatim.\n\n{builder.__doc__}"
+        )
+        return run
+
+    for name, (batch, table, mode) in pipelines.BATCH_TWINS.items():
+        builders[name] = twin(name, batch, table, mode)
+        oracles[name] = ORACLES[batch]
+    return builders, oracles
 
 
-#: streaming builders: (spark, sf_dir) → DataFrame (bounded run)
+#: streaming builders: (spark, sf_dir) → DataFrame (bounded run) — the
+#: hand-written ``pipelines.STREAM_BUILDERS`` plus one twin per
+#: ``pipelines.BATCH_TWINS`` row
 STREAM_BUILDERS, STREAM_ORACLES = _collect_streaming()
 ORACLES = {**ORACLES, **STREAM_ORACLES}
 

@@ -6,6 +6,16 @@ a memory sink; production swaps the source for Kafka and the sink for
 foreachBatch JDBC (sinks.jdbc) without touching the transforms —
 mirroring how each reference app is Kafka-in/Kafka-or-OLAP-out
 (COMMON/base/BaseApp.java:33-68).
+
+A batch query whose builder runs unchanged on a stream gets its
+streaming twin from one row of ``BATCH_TWINS`` — (batch query, stream
+table, output mode) — not from a hand-written ``flow_*`` function; the
+registry builds the twin and reuses the batch oracle. A builder
+qualifies when it is a per-row map (append mode) or a re-associable
+aggregate (complete mode): either way the bounded run's final table
+equals the batch result. A twin that splits streaming state from
+poll-time algebra is written out below and listed in
+``STREAM_BUILDERS``.
 """
 
 from __future__ import annotations
@@ -20,8 +30,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..operators.relational import cents, ts_str
+from ..operators.relational import ts_str
 from ..session import configure_runtime
+from ..sources.files import parquet_stream, text_stream
 
 
 # Staged source dirs and default checkpoints must outlive any stream
@@ -133,31 +144,41 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(_as_stream_dir(path))
     )
+    return _event_time(raw)
+
+
+def _event_time(raw: DataFrame) -> DataFrame:
+    """Normalize an events stream's ``ts`` to TIMESTAMP, whatever
+    physical type the file carries."""
     dtype = dict(raw.dtypes).get("ts")
     if dtype == "bigint":
         # integer div: ns epochs exceed double's exact range (see catalog)
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dtype == "timestamp_ntz":
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dtype == "timestamp_ntz":
         # Watermarks require TIMESTAMP (LTZ); the cast keeps the wall
         # clock under the session timezone, so stream ≡ batch holds.
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
     return raw
+
+
+#: shuffle partitions of every bounded run (see ``_run_to_memory``)
+_RUN_SHUFFLE_PARTITIONS = 8
 
 
 def _run_to_memory(
     df: DataFrame,
     output_mode: str,
-    shuffle_partitions: int = 8,
     no_data_batches: bool = False,
 ) -> DataFrame:
     """Execute a bounded streaming query into a memory sink, return the
     final result table.
 
-    Shuffle partitions are scoped down for the run: streaming state
-    (window/dedup/join/applyInPandasWithState) creates one state store
-    per shuffle partition and the per-store commit overhead dominates
-    bounded runs (measured on the stream-stream join at sf0.1:
-    32 partitions → 6.6 s, 8 → 2.1 s, same results). Sessions from
+    Shuffle partitions are scoped down to ``_RUN_SHUFFLE_PARTITIONS``
+    for the run: streaming state (window/dedup/join/
+    applyInPandasWithState) creates one state store per shuffle
+    partition and the per-store commit overhead dominates bounded runs
+    (measured on the stream-stream join at sf0.1: 32 partitions →
+    6.6 s, 8 → 2.1 s, same results). Sessions from
     ``session.get_spark`` already default to one partition per task
     slot for the same reason; the scoping keeps bounded runs cheap on
     sessions built elsewhere (a vanilla ``SparkSession.builder``
@@ -193,14 +214,11 @@ def _run_to_memory(
     — this scoping exists precisely because bounded verification runs
     are where the flush batch is usually dead weight.
     """
-    return _run_many_to_memory(
-        [(df, output_mode)], shuffle_partitions, no_data_batches
-    )[0]
+    return _run_many_to_memory([(df, output_mode)], no_data_batches)[0]
 
 
 def _run_many_to_memory(
     dfs_modes: list[tuple[DataFrame, str]],
-    shuffle_partitions: int = 8,
     no_data_batches: bool = False,
 ) -> list[DataFrame]:
     """Start EVERY (df, output_mode) bounded query, then await them all
@@ -225,7 +243,7 @@ def _run_many_to_memory(
     spark = dfs_modes[0][0].sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_RUN_SHUFFLE_PARTITIONS))
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled",
         "true" if no_data_batches else "false",
@@ -317,32 +335,6 @@ def compact_latest_snapshot(tbl: DataFrame, key: str) -> DataFrame:
     return tbl.withColumn("_mx", latest).filter(F.col("upd") == F.col("_mx")).drop("_mx")
 
 
-def flow_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/A4 streaming — the tumbling per-type window aggregation run
-    as a real Structured Streaming query (complete mode → the final
-    table equals the batch result, so the batch oracle applies
-    verbatim). The append-mode + watermark variant is exercised in
-    tests (watermark withholds the last open window there).
-    """
-    ev = events_file_stream(spark, sf_dir)
-    w = F.window("ts", "1 hour")
-    agg = (
-        ev.groupBy(w.alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("pv_ct"),
-            F.sum(cents("value")).alias("value_cents"),
-        )
-        .select(
-            ts_str("w.start").alias("stt"),
-            ts_str("w.end").alias("edt"),
-            "event_type",
-            "pv_ct",
-            "value_cents",
-        )
-    )
-    return _run_to_memory(agg, "complete")
-
-
 def flow_daily_uv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T4 streaming — applyInPandasWithState daily-UV flags over the
     events stream, aggregated to per-day UV counts. Order-independent
@@ -390,8 +382,7 @@ def keyword_pipeline_stream(spark: SparkSession, log_dir: str, size: str = "10 s
     from ..gmall.dwd import split_log
     from ..gmall.dws import keyword_window
 
-    raw = spark.readStream.format("text").load(log_dir).withColumnRenamed("value", "value")
-    page = split_log(raw)["page"]
+    page = split_log(text_stream(spark, log_dir))["page"]
     return _run_to_memory(keyword_window(page, size=size), "complete")
 
 
@@ -485,18 +476,12 @@ def _events_stream_sentineled(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         os.utime(sp, (now + 100 + i * 100, now + 100 + i * 100))
 
-    raw = (
+    return _event_time(
         spark.readStream.schema(schema)
         .format("parquet")
         .option("maxFilesPerTrigger", 1)
         .load(d)
     )
-    dtype = dict(raw.dtypes).get("ts")
-    if dtype == "bigint":
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dtype == "timestamp_ntz":
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
 
 
 def flow_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -532,58 +517,6 @@ def flow_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("view_user").alias("user_id"),
     )
     return _run_to_memory(joined, "append").filter(F.col("user_id") >= 0)
-
-
-def flow_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows as a live stream (complete mode ⇒ equals the
-    batch result, same oracle): per-user 30-min-gap sessions — the
-    gap-based windowing the reference's tumbling-only Flink jobs never
-    had, first-class in Structured Streaming.
-    """
-    ev = events_file_stream(spark, sf_dir)
-    w = F.session_window("ts", "30 minutes")
-    agg = (
-        ev.groupBy(w.alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("ev_ct"),
-            F.sum(cents("value")).alias("value_cents"),
-        )
-        .select(
-            "user_id",
-            ts_str("w.start").alias("stt"),
-            ts_str("w.end").alias("edt"),
-            "ev_ct",
-            "value_cents",
-        )
-    )
-    return _run_to_memory(agg, "complete")
-
-
-def flow_cumulate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUMULATE windows as a live stream — the geometry Flink's
-    CUMULATE TVF actually serves ("GMV so far today", refreshed every
-    step): the shared batch transform's explode fan-out is stateless,
-    so it runs unchanged on the stream; the windowed aggregation runs
-    in complete mode, whose final table equals the batch result ⇒ the
-    batch oracle applies verbatim."""
-    from ..operators.timeseries import cumulate_counts
-
-    ev = events_file_stream(spark, sf_dir)
-    return _run_to_memory(cumulate_counts(ev), "complete")
-
-
-def flow_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The hourly OHLC rollup as a live stream — the continuous-
-    aggregate habitat of the transform (a market-data/metrics feed
-    folding into per-hour candles as events arrive). Shared batch
-    transform (``operators.timeseries.ohlc_hourly``: min_by/max_by
-    argmin/argmax, all re-associable) in complete mode, whose final
-    table equals the batch result ⇒ the batch oracle applies verbatim.
-    """
-    from ..operators.timeseries import ohlc_hourly
-
-    ev = events_file_stream(spark, sf_dir)
-    return _run_to_memory(ohlc_hourly(ev), "complete")
 
 
 def flow_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -674,20 +607,6 @@ def flow_value_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(agg, "complete")
 
 
-def flow_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The power-of-two value histogram as a live stream — the
-    continuously-maintained distribution profile behind streaming
-    outlier screens. Shared batch transform
-    (``operators.quality.value_histogram``: the bit-length bucketing
-    is a stateless map; count/min/max are all re-associable) in
-    complete mode, whose final table equals the batch result ⇒ the
-    batch oracle applies verbatim."""
-    from ..operators.quality import value_histogram
-
-    ev = events_file_stream(spark, sf_dir)
-    return _run_to_memory(value_histogram(ev), "complete")
-
-
 #: Prefix-sum bucket width for STREAMING percentile plans over event
 #: values (r9 ADVICE #3). Batch callers may let the helper auto-derive
 #: a width from the input's (min, max, count) — but a streaming caller
@@ -736,18 +655,6 @@ def flow_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_col="n",
         bucket_size=EVENT_VALUE_STREAM_BUCKET,
     ).select("event_type", "p50", "p95", "p99", "n")
-
-
-def flow_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The k-anonymity audit as a live stream — equivalence-class sizes
-    maintained continuously so a release gate can check re-identification
-    risk on CURRENT data, not last night's batch. Shared transform
-    (operators.privacy.k_anonymity_audit) in complete mode; final table
-    equals the batch result so the batch oracle applies verbatim."""
-    from ..operators.privacy import k_anonymity_audit
-
-    ev = events_file_stream(spark, sf_dir)
-    return _run_to_memory(k_anonymity_audit({"events": ev}), "complete")
 
 
 def flow_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1162,24 +1069,20 @@ def documents_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file stream over the driver's documents table — the
     streaming-ingest shape of a training-corpus pipeline (new shards
     land in a directory; each micro-batch processes the new files)."""
-    configure_runtime(spark)
-    return (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, n_chars bigint"
-        )
-        .format("parquet")
-        .load(_as_stream_dir(os.path.join(sf_dir, "documents.parquet")))
+    return parquet_stream(
+        spark,
+        _as_stream_dir(os.path.join(sf_dir, "documents.parquet")),
+        "doc_id bigint, text string, lang string, source string, n_chars bigint",
     )
 
 
 def embeddings_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded file stream over the driver's embeddings table — the
     shape of a live embedding feed (shards land as they are encoded)."""
-    configure_runtime(spark)
-    return (
-        spark.readStream.schema("vec_id bigint, embedding array<float>, label int")
-        .format("parquet")
-        .load(_as_stream_dir(os.path.join(sf_dir, "embeddings.parquet")))
+    return parquet_stream(
+        spark,
+        _as_stream_dir(os.path.join(sf_dir, "embeddings.parquet")),
+        "vec_id bigint, embedding array<float>, label int",
     )
 
 
@@ -1235,52 +1138,6 @@ def flow_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "h", F.coalesce("known", F.lit(0)).alias("known")
     )
     return _run_to_memory(admit_first_per_hash(joined), "append")
-
-
-def flow_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Gopher quality-rule bundle on the document stream — per-rule
-    flags computed as shards arrive (map-only batch transform applied
-    unchanged, per-row and order-independent ⇒ the batch oracle applies
-    verbatim). Together with flow_pii_redaction, flow_quality_filter and
-    flow_incremental_dedup this completes the streaming half of the
-    corpus admission gate."""
-    from ..operators.text import rules_gopher_quality
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(rules_gopher_quality({"documents": docs}), "append")
-
-
-def flow_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language ID on the document stream — the routing decision a
-    multilingual ingest makes per shard before any lang-specific
-    cleaning. Map-only batch transform applied unchanged (per-row,
-    order-independent) ⇒ the batch oracle applies verbatim."""
-    from ..operators.text import text_lang_id
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(text_lang_id({"documents": docs}), "append")
-
-
-def flow_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Readability scoring (Flesch / FK grade) on the document stream —
-    the per-shard surface-form gate read next to flow_gopher_rules and
-    flow_quality_filter in the streaming admission pipeline. Map-only
-    batch transform applied unchanged (per-row, order-independent) ⇒
-    the text_readability batch oracle applies verbatim."""
-    from ..operators.text import text_readability
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(text_readability({"documents": docs}), "append")
-
-
-def flow_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting on the document stream — the running budget meter
-    (whitespace + BPE-ish counts) a corpus build tracks as shards land.
-    Map-only batch transform applied unchanged ⇒ batch oracle verbatim."""
-    from ..operators.text import doc_token_count
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(doc_token_count({"documents": docs}), "append")
 
 
 def flow_heavy_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1557,33 +1414,6 @@ def flow_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def flow_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming video frame sampling: the metadata-pruned
-    mapInPandas frame fan-out (operators.multimodal) applied unchanged
-    to the media stream — per-row, order-independent, append mode —
-    the ingest shape a multimodal pipeline runs as video shards land,
-    before any embedding stage. Batch oracle applies verbatim.
-    """
-    from ..operators.multimodal import media_projection, sample_video_frames
-
-    media = media_projection(documents_file_stream(spark, sf_dir))
-    vids = media.filter(F.col("mime") == "video/mp4")
-    return _run_to_memory(sample_video_frames(vids), "append")
-
-
-def flow_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming RAG chunking: the sliding-window chunker
-    (operators.text.corpus_chunk_sliding) applied unchanged to the
-    document stream — per-row, order-independent, append mode — the
-    ingest stage that feeds a retrieval index as shards land. Batch
-    oracle applies verbatim.
-    """
-    from ..operators.text import corpus_chunk_sliding
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(corpus_chunk_sliding({"documents": docs}), "append")
-
-
 def flow_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming count-min sketch: the D×W grid is maintained
     continuously over the live token stream — 1024 keys of state
@@ -1689,32 +1519,6 @@ def flow_zipf_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("ct"))
     )
     return zipf_topn_from_counts(_run_to_memory(counts, "complete"), n=25)
-
-
-def flow_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming corpus PII redaction: the map-only batch transform
-    (operators/privacy.py) applied unchanged to the document stream —
-    per-row, order-independent, so the batch oracle applies verbatim.
-    The shape a privacy scrub runs in as shards arrive, before anything
-    else touches the corpus.
-    """
-    from ..operators.privacy import pii_redaction
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(pii_redaction({"documents": docs}), "append")
-
-
-def flow_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming corpus quality scoring: the map-only batch transform
-    (operators/text.py::text_quality_score) applied unchanged to the
-    document stream — per-row and order-independent, so the batch
-    oracle applies verbatim. With flow_pii_redaction this is the
-    arriving-shard half of the corpus-clean pipeline.
-    """
-    from ..operators.text import text_quality_score
-
-    docs = documents_file_stream(spark, sf_dir)
-    return _run_to_memory(text_quality_score({"documents": docs}), "append")
 
 
 def flow_keyword_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1890,21 +1694,46 @@ def flow_epoch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     return epoch_schedule_from_totals(_run_to_memory(totals, "complete"))
 
 
-# Declared streaming queries (driver contract): signature
-# (spark, sf_dir) → DataFrame. Oracles reuse the batch queries' SQL —
-# complete-mode / order-independent outputs are batch-equivalent.
+#: Streaming twins that run a batch query's builder unchanged on a file
+#: stream: flow name → (batch query, stream table, output mode). The
+#: registry builds each twin's (spark, sf_dir) builder from its row and
+#: gives it the batch query's oracle.
+BATCH_TWINS = {
+    # re-associable aggregates over the events stream
+    "flow_window_counts": ("agg_tumbling_typed", "events", "complete"),
+    "flow_session_windows": ("session_window_events", "events", "complete"),
+    "flow_cumulate": ("win_cumulate_counts", "events", "complete"),
+    "flow_ohlc": ("ts_ohlc_hourly", "events", "complete"),
+    "flow_histogram": ("quality_value_histogram", "events", "complete"),
+    "flow_k_anonymity": ("privacy_k_anonymity", "events", "complete"),
+    # per-row maps over the documents stream
+    "flow_frame_sample": ("xmodal_frame_sample", "documents", "append"),
+    "flow_gopher_rules": ("doc_gopher_rules", "documents", "append"),
+    "flow_lang_id": ("text_lang_id", "documents", "append"),
+    "flow_readability": ("text_readability", "documents", "append"),
+    "flow_token_count": ("doc_token_count", "documents", "append"),
+    "flow_chunking": ("corpus_chunk_sliding", "documents", "append"),
+    "flow_pii_redaction": ("text_pii_redaction", "documents", "append"),
+    "flow_quality_filter": ("text_quality_score", "documents", "append"),
+}
+
+
+# Hand-written streaming queries (driver contract): signature
+# (spark, sf_dir) → DataFrame. Each splits its streaming state from the
+# poll-time algebra, or needs a source, join or state operator no batch
+# builder has. A new twin of a batch query goes in ``BATCH_TWINS``
+# instead when the batch builder is a per-row map (append mode) or a
+# re-associable aggregate (complete mode) over the events or documents
+# table. Oracles reuse the batch queries' SQL where the final table is
+# batch-equivalent.
 STREAM_BUILDERS = {
     "flow_funnel": flow_funnel,
-    "flow_window_counts": flow_window_counts,
     "flow_daily_uv": flow_daily_uv,
     "flow_dedup_first": flow_dedup_first,  # rows-only: arrival-order pick
     "flow_keyword_pipeline": flow_keyword_pipeline,
     "flow_interval_join": flow_interval_join,
     "flow_left_outer": flow_left_outer,
-    "flow_cumulate": flow_cumulate,
-    "flow_ohlc": flow_ohlc,
     "flow_value_tiers": flow_value_tiers,
-    "flow_histogram": flow_histogram,
     "flow_backfill_ohlc": flow_backfill_ohlc,
     "flow_user_quota": flow_user_quota,
     "flow_anomaly_mad": flow_anomaly_mad,
@@ -1919,16 +1748,13 @@ STREAM_BUILDERS = {
     "flow_bloom_contamination": flow_bloom_contamination,
     "flow_perplexity_gate": flow_perplexity_gate,
     "flow_dsir_gate": flow_dsir_gate,
-    "flow_frame_sample": flow_frame_sample,
     "flow_cusum": flow_cusum,
     "flow_pseudonymize": flow_pseudonymize,
-    "flow_chunking": flow_chunking,
     "flow_countmin": flow_countmin,
     "flow_token_gini": flow_token_gini,
     "flow_simpson_diversity": flow_simpson_diversity,
     "flow_zipf_topn": flow_zipf_topn,
     "flow_percentiles": flow_percentiles,
-    "flow_k_anonymity": flow_k_anonymity,
     "flow_t_closeness": flow_t_closeness,
     "flow_dp_counts": flow_dp_counts,
     "flow_dp_release_card": flow_dp_release_card,
@@ -1942,13 +1768,6 @@ STREAM_BUILDERS = {
     "flow_decayed_engagement": flow_decayed_engagement,
     "flow_incremental_dedup": flow_incremental_dedup,
     "flow_sq8_encode": flow_sq8_encode,
-    "flow_session_windows": flow_session_windows,
-    "flow_pii_redaction": flow_pii_redaction,
-    "flow_gopher_rules": flow_gopher_rules,
-    "flow_lang_id": flow_lang_id,
-    "flow_readability": flow_readability,
-    "flow_token_count": flow_token_count,
-    "flow_quality_filter": flow_quality_filter,
     "flow_user_register": flow_user_register,
 }
 
@@ -1959,8 +1778,6 @@ def stream_oracles() -> dict[str, str]:
     from ..operators.dedup import ORACLES as DD
     from ..operators.privacy import ORACLES as PRIV
     from ..operators.privacy import _DP_IDX_DUCK, _DP_NOISE_DUCK
-    from ..operators.multimodal import ORACLES as XMOD
-    from ..operators.quality import ORACLES as QUAL
     from ..operators.sampling import ORACLES as SAMP
     from ..operators import relational as _REL_MOD
     from ..operators.relational import ORACLES as REL
@@ -1997,14 +1814,11 @@ def stream_oracles() -> dict[str, str]:
             FROM words
             GROUP BY ws, keyword
         """,
-        "flow_cumulate": TS["win_cumulate_counts"],
-        "flow_ohlc": TS["ts_ohlc_hourly"],
         "flow_backfill_ohlc": TS["ts_ohlc_hourly"],
         "flow_user_quota": ST["table_user_quota"],
         "flow_percentiles": REL["event_value_percentiles"],
         "flow_incremental_dedup": DD["text_incremental_dedup"],
         "flow_sq8_encode": SIM["embedding_sq8_codes"],
-        "flow_k_anonymity": PRIV["privacy_k_anonymity"],
         "flow_anomaly_mad": BEH["events_anomaly_mad"],
         "flow_heavy_tokens": TXT["corpus_heavy_tokens"],
         "flow_kmv": _REL_MOD.KMV_FLOW_ORACLE,
@@ -2017,10 +1831,8 @@ def stream_oracles() -> dict[str, str]:
         "flow_bloom_contamination": SAMP["sample_bloom_contamination"],
         "flow_perplexity_gate": TXT["doc_perplexity_bigram"],
         "flow_dsir_gate": SAMP["sample_dsir_weights"],
-        "flow_frame_sample": XMOD["xmodal_frame_sample"],
         "flow_cusum": TS["ts_cusum_changepoints"],
         "flow_pseudonymize": PRIV["privacy_pseudonymize"],
-        "flow_chunking": TXT["corpus_chunk_sliding"],
         "flow_countmin": TXT["corpus_countmin_tokens"],
         "flow_token_gini": TXT["corpus_token_gini"],
         "flow_simpson_diversity": TXT["corpus_simpson_diversity"],
@@ -2065,17 +1877,8 @@ def stream_oracles() -> dict[str, str]:
         "flow_token_budget": SAMP["sample_token_budget"],
         "flow_decayed_engagement": BEH["events_decayed_engagement"],
         "flow_value_tiers": REL["range_join_value_tiers"],
-        "flow_histogram": QUAL["quality_value_histogram"],
         "flow_funnel": BEH["funnel_conversion"],
-        "flow_pii_redaction": PRIV["text_pii_redaction"],
-        "flow_gopher_rules": TXT["doc_gopher_rules"],
-        "flow_lang_id": TXT["text_lang_id"],
-        "flow_readability": TXT["text_readability"],
-        "flow_token_count": TXT["doc_token_count"],
-        "flow_quality_filter": TXT["text_quality_score"],
-        "flow_window_counts": REL["agg_tumbling_typed"],
         "flow_daily_uv": ST["traffic_daily_uv"],
-        "flow_session_windows": REL["session_window_events"],
         "flow_user_register": """
             SELECT strftime(time_bucket(INTERVAL '5 seconds', ts) + INTERVAL 8 HOUR,
                             '%Y-%m-%d %H:%M:%S') AS stt,

@@ -133,6 +133,25 @@ def test_no_orphan_oracles():
     assert not orphans, f"oracles without queries: {orphans}"
 
 
+def test_batch_twins_contract():
+    """Every ``pipelines.BATCH_TWINS`` row names a declared (so not
+    bench-only) batch query, reuses its oracle verbatim, streams a table
+    the registry has a file stream for, in a mode whose bounded final
+    table equals the batch result — and is not also hand-written in
+    ``STREAM_BUILDERS``."""
+    from gmall_realtime_ck_spark.streaming import pipelines
+
+    assert pipelines.BATCH_TWINS
+    declared = set(registry.all_query_names())
+    for flow, (batch, table, mode) in pipelines.BATCH_TWINS.items():
+        assert batch in declared, flow
+        assert flow in declared and flow in registry.STREAM_BUILDERS, flow
+        assert registry.ORACLES[flow] == registry.ORACLES[batch], flow
+        assert table in ("events", "documents"), flow
+        assert mode in ("append", "complete"), flow
+        assert flow not in pipelines.STREAM_BUILDERS, flow
+
+
 def test_ledger_queue_names_resolve():
     """tools/gen_ledger.py's rotation queues must reference declared
     queries only — a typo there silently prints a dead ledger row and,

@@ -32,14 +32,15 @@ def test_write_sharded_balanced(tables, spark, tmp_path):
 
 
 def test_progress_recorder_captures_throughput(spark, tmp_path):
-    from gmall_realtime_ck_spark.streaming import monitor, pipelines
+    from gmall_realtime_ck_spark import registry
+    from gmall_realtime_ck_spark.streaming import monitor
     from tests.conftest import SF_DIR
 
     import time
 
     rec = monitor.attach(spark)
     try:
-        pipelines.flow_window_counts(spark, SF_DIR)
+        registry.STREAM_BUILDERS["flow_window_counts"](spark, SF_DIR)
         # listener events are delivered asynchronously — poll briefly
         deadline = time.time() + 20
         while time.time() < deadline and rec.total_input_rows() == 0:
