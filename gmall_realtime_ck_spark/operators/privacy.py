@@ -216,7 +216,13 @@ def t_closeness_audit(t: dict[str, DataFrame]) -> DataFrame:
     — the domain is an aggregate, never event-sized) and the EMD
     window partitions by class over ≤ m rows.
     """
-    ev = t["events"]
+    return t_closeness_from_class_counts(class_sensitive_counts(t["events"]))
+
+
+def class_sensitive_counts(ev: DataFrame) -> DataFrame:
+    """Per-(QI class, sensitive value) event counts — the audit's one
+    event-sized aggregate, kept in complete mode by the streaming
+    twin."""
     qi = ev.select(
         "event_type",
         F.date_format("ts", "yyyy-MM-dd").alias("day"),
@@ -225,10 +231,9 @@ def t_closeness_audit(t: dict[str, DataFrame]) -> DataFrame:
         ).alias("value_tier"),
         (F.col("user_id") % 50).alias("sensitive"),
     )
-    cls_sens = qi.groupBy("event_type", "day", "value_tier", "sensitive").agg(
+    return qi.groupBy("event_type", "day", "value_tier", "sensitive").agg(
         F.count(F.lit(1)).alias("ct")
     )
-    return t_closeness_from_class_counts(cls_sens)
 
 
 def t_closeness_from_class_counts(cls_sens: DataFrame) -> DataFrame:
@@ -503,8 +508,8 @@ def dp_release_card(noisy: DataFrame) -> DataFrame:
 
 def dp_release_card_query(t: dict[str, DataFrame]) -> DataFrame:
     """``privacy_dp_release_card`` — the DP release card over the
-    events table (dp_count_release → dp_release_card)."""
-    return dp_release_card(dp_count_release(t))
+    events table (dp_cell_counts → dp_noisy_counts → dp_release_card)."""
+    return dp_release_card(dp_noisy_counts(dp_cell_counts(t["events"])))
 
 
 def dp_count_release(t: dict[str, DataFrame]) -> DataFrame:
@@ -522,11 +527,16 @@ def dp_count_release(t: dict[str, DataFrame]) -> DataFrame:
     then a pure-map noise lookup over the |types|·|days| release cells
     — nothing else shuffles, nothing sorts, no per-row Python.
     """
-    ev = t["events"]
-    counts = ev.groupBy(
+    return dp_noisy_counts(dp_cell_counts(t["events"]))
+
+
+def dp_cell_counts(ev: DataFrame) -> DataFrame:
+    """Raw per-(event_type, day) release-cell counts — the release's
+    one keyed aggregate, kept in complete mode by the streaming
+    twins."""
+    return ev.groupBy(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("day")
     ).agg(F.count(F.lit(1)).alias("n"))
-    return dp_noisy_counts(counts)
 
 
 ORACLES: dict[str, str] = {

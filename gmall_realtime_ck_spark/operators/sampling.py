@@ -668,9 +668,14 @@ def sample_epoch_schedule(t: dict[str, DataFrame]) -> DataFrame:
     |sources|-row algebra (the global sums ride a window over that
     tiny aggregate, as in ``sample_mixture_resample``).
     """
-    docs = t["documents"]
+    return epoch_schedule_from_totals(source_token_totals(t["documents"]))
+
+
+def source_token_totals(docs: DataFrame) -> DataFrame:
+    """Per-source token totals — the planner's one keyed aggregate,
+    kept in complete mode by the streaming twin. O(sources)."""
     tok = F.size(F.expr(TOKENS_SPARK.format(c="text"))).cast("bigint")
-    return epoch_schedule_from_totals(
+    return (
         docs.select("source", tok.alias("tok"))
         .groupBy("source")
         .agg(F.sum("tok").alias("tokens"))

@@ -1248,12 +1248,18 @@ def corpus_token_gini(t: dict[str, DataFrame]) -> DataFrame:
     per source over the vocab-sized AGGREGATE, then a per-source
     reduce. Raw tokens never see a window.
     """
-    docs = t["documents"]
+    return gini_from_counts(source_token_counts(t["documents"]))
+
+
+def source_token_counts(docs: DataFrame) -> DataFrame:
+    """Per-(source, token) occurrence counts over the tokenized
+    documents — the one keyed aggregate under the vocabulary
+    diagnostics (Gini, Simpson, hapax, Zipf), kept in complete mode by
+    their streaming twins. Vocab-sized per source."""
     toks = docs.select(
         "source", F.explode(F.expr(TOKENS_SPARK.format(c="text"))).alias("token")
     )
-    counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
-    return gini_from_counts(counts)
+    return toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
 
 
 def corpus_hapax_share(t: dict[str, DataFrame]) -> DataFrame:
@@ -1264,13 +1270,9 @@ def corpus_hapax_share(t: dict[str, DataFrame]) -> DataFrame:
     Pure keyed aggregation over the vocab-sized count table — no
     window at all.
     """
-    docs = t["documents"]
-    toks = docs.select(
-        "source", F.explode(F.expr(TOKENS_SPARK.format(c="text"))).alias("token")
-    )
-    counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
     return (
-        counts.groupBy("source")
+        source_token_counts(t["documents"])
+        .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("vocab"),
             F.sum((F.col("ct") == 1).cast("bigint")).alias("hapax"),
@@ -1344,12 +1346,7 @@ def corpus_simpson_diversity(t: dict[str, DataFrame]) -> DataFrame:
     per-source counters themselves stay int64 (safe to ~9·10¹⁸
     tokens).
     """
-    docs = t["documents"]
-    toks = docs.select(
-        "source", F.explode(F.expr(TOKENS_SPARK.format(c="text"))).alias("token")
-    )
-    counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
-    return simpson_from_counts(counts)
+    return simpson_from_counts(source_token_counts(t["documents"]))
 
 
 def simpson_from_counts(counts: DataFrame) -> DataFrame:
@@ -1433,12 +1430,7 @@ def text_zipf_fit(t: dict[str, DataFrame]) -> DataFrame:
     (tests/test_invariants_new.py::test_zipf_topn_slope_converges /
     test_zipf_topn_equals_full_when_unsliced).
     """
-    docs = t["documents"]
-    toks = docs.select(
-        "source", F.explode(F.expr(TOKENS_SPARK.format(c="text"))).alias("token")
-    )
-    counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
-    return zipf_from_counts(counts)
+    return zipf_from_counts(source_token_counts(t["documents"]))
 
 
 def zipf_from_counts(counts: DataFrame) -> DataFrame:
@@ -1504,12 +1496,7 @@ def text_zipf_topn_fit(t: dict[str, DataFrame]) -> DataFrame:
     ``vocab`` still reports the FULL vocabulary size — a keyed count
     with map-side partials, no sort anywhere.
     """
-    docs = t["documents"]
-    toks = docs.select(
-        "source", F.explode(F.expr(TOKENS_SPARK.format(c="text"))).alias("token")
-    )
-    counts = toks.groupBy("source", "token").agg(F.count(F.lit(1)).alias("ct"))
-    return zipf_topn_from_counts(counts, n=25)
+    return zipf_topn_from_counts(source_token_counts(t["documents"]), n=25)
 
 
 def zipf_topn_from_counts(counts: DataFrame, n: int = ZIPF_TOPN) -> DataFrame:

@@ -564,12 +564,15 @@ def ts_cusum_changepoints(t: dict[str, DataFrame]) -> DataFrame:
     Scale: aggregate-first — one keyed (type, day) count shuffle, then
     one ordered window per type over the |types| × |days| AGGREGATE.
     """
-    daily = (
-        t["events"]
-        .groupBy("event_type", F.to_date("ts").alias("day"))
-        .agg(F.count(F.lit(1)).alias("ct"))
+    return cusum_from_daily(type_day_counts(t["events"]))
+
+
+def type_day_counts(ev: DataFrame) -> DataFrame:
+    """Per-(event_type, day) event counts — the chart's one keyed
+    aggregate, kept in complete mode by the streaming twin."""
+    return ev.groupBy("event_type", F.to_date("ts").alias("day")).agg(
+        F.count(F.lit(1)).alias("ct")
     )
-    return cusum_from_daily(daily)
 
 
 def cusum_from_daily(daily: DataFrame) -> DataFrame:

@@ -74,28 +74,39 @@ def _collect_streaming() -> tuple[dict[str, Callable], dict[str, str]]:
         "documents": pipelines.documents_file_stream,
     }
 
-    def twin(name: str, batch: str, table: str, mode: str) -> Callable:
+    def twin(name, batch, table, mode, spine=None, poll=None) -> Callable:
+        """The (spark, sf_dir) builder of a ``BATCH_TWINS`` row (the
+        whole batch builder streams) or a ``SPINE_TWINS`` row (only
+        ``spine`` streams; ``poll`` re-runs over its table)."""
         builder, file_stream = BUILDERS[batch], streams[table]
+        streamed = spine or (lambda df: builder({table: df}))
 
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return pipelines._run_to_memory(builder({table: file_stream(spark, sf_dir)}), mode)
+            result = pipelines._run_to_memory(streamed(file_stream(spark, sf_dir)), mode)
+            return poll(result) if poll else result
 
-        run.__name__ = run.__qualname__ = name
-        run.__doc__ = (
-            f"``{batch}`` run unchanged on the {table} file stream in {mode}"
-            f" mode; its batch oracle applies verbatim.\n\n{builder.__doc__}"
+        how = (
+            f"``{spine.__name__}`` kept on the {table} file stream in {mode} mode"
+            " and the poll re-run over its table"
+            if spine
+            else f"run unchanged on the {table} file stream in {mode} mode"
         )
+        run.__name__ = run.__qualname__ = name
+        run.__doc__ = f"``{batch}`` {how}; its batch oracle applies verbatim.\n\n{builder.__doc__}"
         return run
 
     for name, (batch, table, mode) in pipelines.BATCH_TWINS.items():
         builders[name] = twin(name, batch, table, mode)
+        oracles[name] = ORACLES[batch]
+    for name, (batch, table, spine, poll) in pipelines.SPINE_TWINS.items():
+        builders[name] = twin(name, batch, table, "complete", spine, poll)
         oracles[name] = ORACLES[batch]
     return builders, oracles
 
 
 #: streaming builders: (spark, sf_dir) → DataFrame (bounded run) — the
 #: hand-written ``pipelines.STREAM_BUILDERS`` plus one twin per
-#: ``pipelines.BATCH_TWINS`` row
+#: ``pipelines.BATCH_TWINS`` and ``pipelines.SPINE_TWINS`` row
 STREAM_BUILDERS, STREAM_ORACLES = _collect_streaming()
 ORACLES = {**ORACLES, **STREAM_ORACLES}
 

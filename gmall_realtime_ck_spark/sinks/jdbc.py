@@ -57,20 +57,20 @@ def jdbc_batch_writer(
     return write
 
 
-def parquet_batch_writer(path: str, partition_by: tuple[str, ...] = (), mode: str = "append"):
+def parquet_batch_writer(path: str, partition_by: tuple[str, ...] = ()):
     """Container-friendly stand-in for the OLAP sink with the same
-    foreachBatch contract — DWS outputs land date-partitioned like the
-    reference's ``PARTITION parYYYYMMDD`` tables
-    (PUB/mapper/TradeStatsMapper.java:27). A partitioned write is
+    foreachBatch contract — each batch appends; DWS outputs land
+    date-partitioned like the reference's ``PARTITION parYYYYMMDD``
+    tables (PUB/mapper/TradeStatsMapper.java:27). A partitioned write is
     hash-repartitioned on the partition columns first, so each batch
     adds one file per date partition instead of one per (task, date)."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         if partition_by:
-            batch_df.repartition(*partition_by).write.mode(mode).partitionBy(
+            batch_df.repartition(*partition_by).write.mode("append").partitionBy(
                 *partition_by
             ).parquet(path)
         else:
-            batch_df.write.mode(mode).parquet(path)
+            batch_df.write.mode("append").parquet(path)
 
     return write

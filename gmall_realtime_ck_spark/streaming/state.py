@@ -43,11 +43,10 @@ _UV_OUT = StructType(
 )
 
 
-def daily_uv_flags(events: DataFrame, key_col: str = "user_id", date_col: str = "cur_date",
-                   ttl_ms: int | None = None) -> DataFrame:
-    """T4 streaming — first-record-of-day flag per key
+def daily_uv_flags(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
+    """T4 streaming — first-record-of-day flag per user
     (DwsTrafficVcChArIsNewPageViewWindow.java:62-107). Input needs
-    ``key_col`` and a precomputed ``date_col`` string column; emits one
+    ``user_id`` and a precomputed ``cur_date`` string column; emits one
     row per input record with uv ∈ {0,1}.
 
     ``ttl_ms`` reproduces the reference's ValueState TTL (1 day at
@@ -65,7 +64,7 @@ def daily_uv_flags(events: DataFrame, key_col: str = "user_id", date_col: str = 
         seen = set((state.get[0] or "").split(",")) - {""} if state.exists else set()
         for pdf in pdf_iter:
             # vectorized: flag = first occurrence in batch AND not seen before
-            dates = pdf[date_col]
+            dates = pdf["cur_date"]
             first_in_batch = ~dates.duplicated()
             flags = (first_in_batch & ~dates.isin(seen)).astype("int64")
             seen.update(dates[first_in_batch])
@@ -79,7 +78,7 @@ def daily_uv_flags(events: DataFrame, key_col: str = "user_id", date_col: str = 
         else GroupStateTimeout.NoTimeout
     )
     return (
-        events.groupBy(key_col)
+        events.groupBy("user_id")
         .applyInPandasWithState(fn, _UV_OUT, _UV_STATE, "append", timeout)
     )
 
@@ -439,6 +438,8 @@ def _kmv_merge(cur, batch, k: int, sat: int):
 
 
 def _kmv_decode(hs: str):
+    """Comma-joined int64 state string → int64 array (the KMV hash set
+    and both halves of the domain-cap pair state)."""
     import numpy as np
 
     return np.array(hs.split(","), dtype="int64") if hs else np.array([], dtype="int64")
@@ -626,12 +627,6 @@ def _pair_merge(cur_h, cur_d, bh, bd, k: int):
     return h[:k], d[:k]
 
 
-def _pair_decode(s: str):
-    import numpy as np
-
-    return np.array(s.split(","), dtype="int64") if s else np.array([], dtype="int64")
-
-
 def domain_cap_stream(sh: DataFrame, cap: int) -> DataFrame:
     """Streaming per-domain quota admission with BOUNDED state: per
     source, state is exactly the running CAP-first set of (h, doc_id)
@@ -655,9 +650,9 @@ def domain_cap_stream(sh: DataFrame, cap: int) -> DataFrame:
         (src,) = key
         if state.exists:
             hs, ids, upd = state.get
-            cur_h, cur_d, upd = _pair_decode(hs), _pair_decode(ids), int(upd)
+            cur_h, cur_d, upd = _kmv_decode(hs), _kmv_decode(ids), int(upd)
         else:
-            cur_h, cur_d, upd = _pair_decode(""), _pair_decode(""), 0
+            cur_h, cur_d, upd = _kmv_decode(""), _kmv_decode(""), 0
         prev_h, prev_d, existed = cur_h, cur_d, state.exists
         for pdf in pdf_iter:
             cur_h, cur_d = _pair_merge(

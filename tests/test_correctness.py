@@ -134,22 +134,29 @@ def test_no_orphan_oracles():
 
 
 def test_batch_twins_contract():
-    """Every ``pipelines.BATCH_TWINS`` row names a declared (so not
-    bench-only) batch query, reuses its oracle verbatim, streams a table
-    the registry has a file stream for, in a mode whose bounded final
-    table equals the batch result — and is not also hand-written in
-    ``STREAM_BUILDERS``."""
+    """Every ``pipelines.BATCH_TWINS`` and ``pipelines.SPINE_TWINS`` row
+    names a declared (so not bench-only) batch query, reuses its oracle
+    verbatim and streams a table the registry has a file stream for —
+    a batch twin in a mode whose bounded final table equals the batch
+    result, a spine twin with a callable spine and poll — and is not
+    also hand-written in ``STREAM_BUILDERS`` or listed in both tables."""
     from gmall_realtime_ck_spark.streaming import pipelines
 
-    assert pipelines.BATCH_TWINS
+    assert pipelines.BATCH_TWINS and pipelines.SPINE_TWINS
     declared = set(registry.all_query_names())
-    for flow, (batch, table, mode) in pipelines.BATCH_TWINS.items():
-        assert batch in declared, flow
+    rows = [(flow, batch, table) for flow, (batch, table, _) in pipelines.BATCH_TWINS.items()]
+    rows += [(flow, batch, table) for flow, (batch, table, *_) in pipelines.SPINE_TWINS.items()]
+    for flow, batch, table in rows:
+        assert batch in declared and batch not in registry.BENCH_ONLY, flow
         assert flow in declared and flow in registry.STREAM_BUILDERS, flow
         assert registry.ORACLES[flow] == registry.ORACLES[batch], flow
         assert table in ("events", "documents"), flow
-        assert mode in ("append", "complete"), flow
         assert flow not in pipelines.STREAM_BUILDERS, flow
+    for flow, (_, _, mode) in pipelines.BATCH_TWINS.items():
+        assert mode in ("append", "complete"), flow
+        assert flow not in pipelines.SPINE_TWINS, flow
+    for flow, (_, _, spine, poll) in pipelines.SPINE_TWINS.items():
+        assert callable(spine) and callable(poll), flow
 
 
 def test_ledger_queue_names_resolve():

@@ -307,17 +307,18 @@ def test_kafka_sink_builders_construct(spark):
     assert ks.to_kafka_upsert(df, "t", "broker:9092", key_col="key") is not None
 
 
-def test_t_closeness_stream_equals_batch(spark, tables):
-    """flow_t_closeness: the complete-mode class×sensitive count
-    stream fed through the shared EMD spine
-    (privacy.t_closeness_from_class_counts) equals the batch audit
-    exactly — the streaming twin re-runs only class-level algebra per
-    poll, so equality is structural, not approximate."""
-    from gmall_realtime_ck_spark.operators.privacy import t_closeness_audit
+@pytest.mark.parametrize("flow", sorted(pipelines.SPINE_TWINS))
+def test_spine_twin_stream_equals_batch(spark, tables, flow):
+    """A ``SPINE_TWINS`` flow streams only its batch query's keyed
+    aggregate (complete mode) and re-runs the poll algebra over its
+    table, so it equals the batch query row for row — equality is
+    structural, not approximate."""
+    from gmall_realtime_ck_spark import registry
 
-    out = pipelines.flow_t_closeness(spark, SF_DIR)
-    batch = t_closeness_audit(tables)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, batch.collect()))
+    batch = pipelines.SPINE_TWINS[flow][0]
+    got = sorted(map(tuple, registry.STREAM_BUILDERS[flow](spark, SF_DIR).collect()))
+    want = sorted(map(tuple, registry.BUILDERS[batch](tables).collect()))
+    assert got == want
 
 
 def test_flow_kmv_bounded_state_matches_batch(spark, tables):
@@ -649,17 +650,6 @@ def test_flow_domain_cap_bounded_state_matches_batch(spark, tables):
     assert got == want
 
 
-def test_flow_epoch_schedule_matches_batch(spark, tables):
-    """The epoch-planner twin re-runs the shared |sources|-row algebra
-    over complete-mode token totals — equality with the batch planner
-    is structural, not approximate."""
-    from gmall_realtime_ck_spark.operators.sampling import sample_epoch_schedule
-
-    got = sorted(map(tuple, pipelines.flow_epoch_schedule(spark, SF_DIR).collect()))
-    want = sorted(map(tuple, sample_epoch_schedule(tables).collect()))
-    assert got == want
-
-
 def test_pair_merge_property_matches_set_model():
     """Property (hypothesis, no Spark): folding _pair_merge over ANY
     batching/permutation of (h, doc_id) pairs — duplicates included —
@@ -669,7 +659,7 @@ def test_pair_merge_property_matches_set_model():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from gmall_realtime_ck_spark.streaming.state import _pair_decode, _pair_merge
+    from gmall_realtime_ck_spark.streaming.state import _kmv_decode, _pair_merge
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -685,7 +675,7 @@ def test_pair_merge_property_matches_set_model():
     )
     def check(pairs, k, rng):
         rng.shuffle(pairs)
-        cur_h, cur_d = _pair_decode(""), _pair_decode("")
+        cur_h, cur_d = _kmv_decode(""), _kmv_decode("")
         i = 0
         while i < len(pairs):
             j = i + rng.randint(1, 7)
