@@ -10,17 +10,75 @@ Spark-first: dim tables are parquet (Delta-style MERGE semantics done
 manually — last-write-wins by (rowkey, ts), deletes applied), kept
 small and broadcast-joined by consumers, which removes the need for
 the Redis/HBase cache hierarchy entirely (SURVEY §2.4 J6).
+
+Store layout: one directory per table, ``<store>/<table>/`` (SCD2
+history: ``<store>/<table>_scd2/``). A merge writes its whole new
+snapshot once, into a fresh version directory ``_v<N>``, then commits
+it by writing the version's name to ``_CURRENT.tmp`` and
+``os.replace``-ing that over ``_CURRENT``: the rename is the commit
+point. It then deletes every other entry of the table directory
+(replaced versions, failed attempts). Readers resolve ``_CURRENT``; a
+table directory without one is read as a plain parquet table, which is
+how an initial load may be staged. Every read declares the store's
+schema (``schemas.DIM_SNAPSHOT`` / ``schemas.DIM_SCD2``), so it runs no
+Spark job and never has to infer a schema from the files.
+
+Crash contract: a merge that fails or dies at any point before the
+rename leaves ``_CURRENT`` naming the previous version, so readers and
+the next merge see the previous snapshot, and the partial directory is
+swept by the next commit. A replayed batch converges to the same
+snapshot and the same history. The sweep deletes the replaced version,
+so a DataFrame read before a merge must be evaluated before it.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..schemas import TABLE_PROCESS_DIM
+from ..schemas import DIM_SCD2, DIM_SNAPSHOT, TABLE_PROCESS_DIM
 from .dwd import parse_topic_db
+
+_POINTER = "_CURRENT"
+
+
+def _live(path: str) -> str:
+    """The directory holding a table's committed snapshot: the version
+    its pointer names, or the table directory itself without one."""
+    try:
+        with open(os.path.join(path, _POINTER)) as f:
+            return os.path.join(path, f.read())
+    except FileNotFoundError:
+        return path
+
+
+def _read(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    return spark.read.schema(schema).parquet(_live(path))
+
+
+def _publish(df: DataFrame, path: str) -> None:
+    """Write ``df`` once as a new version of the table at ``path``,
+    commit it by renaming the pointer over the old one, then delete
+    what it replaced."""
+    os.makedirs(path, exist_ok=True)
+    done = [int(e[2:]) for e in os.listdir(path) if e.startswith("_v") and e[2:].isdigit()]
+    version = f"_v{max(done, default=0) + 1}"  # never reuses a failed attempt's name
+    df.write.parquet(os.path.join(path, version))
+    tmp = os.path.join(path, _POINTER + ".tmp")
+    with open(tmp, "w") as f:
+        f.write(version)
+    os.replace(tmp, os.path.join(path, _POINTER))  # the commit point
+    for entry in os.listdir(path):
+        if entry not in (_POINTER, version):
+            old = os.path.join(path, entry)
+            if os.path.isdir(old):
+                shutil.rmtree(old)
+            else:
+                os.remove(old)
 
 
 def dim_config(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -60,7 +118,7 @@ def merge_dim_batch(
 ) -> dict[str, DataFrame]:
     """K9 — apply a batch of dim changes to the parquet dim store:
     per sink_table, last-write-wins by (row_key, ts desc), deletes
-    removed. Returns the new snapshots (also written to store_dir).
+    removed. Returns the new snapshots (also committed to store_dir).
     Called from foreachBatch in streaming; idempotent per batch
     (replays converge to the same snapshot).
     """
@@ -72,8 +130,8 @@ def merge_dim_batch(
         )
         path = os.path.join(store_dir, table)
         merged = batch
-        if os.path.isdir(path):  # an unreadable store raises: never overwrite it
-            existing = spark.read.parquet(path).select(
+        if os.path.isdir(path):  # an unreadable store fails the write: no commit
+            existing = _read(spark, path, DIM_SNAPSHOT).select(
                 "row_key", "data", F.lit("U").alias("op"), "ts"
             )
             merged = existing.unionByName(batch)
@@ -83,18 +141,15 @@ def merge_dim_batch(
             .filter((F.col("rn") == 1) & (F.col("op") != "D"))
             .select("row_key", "data", "ts")
         )
-        snapshot.write.mode("overwrite").parquet(path + "_new")
-        # atomic-ish swap: write new, point readers at the fresh copy
-        final = spark.read.parquet(path + "_new")
-        final.write.mode("overwrite").parquet(path)
-        out[table] = spark.read.parquet(path)
+        _publish(snapshot, path)
+        out[table] = _read(spark, path, DIM_SNAPSHOT)
     return out
 
 
 def dim_snapshot(spark: SparkSession, store_dir: str, table: str, columns: list[str]) -> DataFrame:
     """Read one dim table from the store, exploding the pruned map back
     to typed columns for broadcast joins."""
-    df = spark.read.parquet(os.path.join(store_dir, table))
+    df = _read(spark, os.path.join(store_dir, table), DIM_SNAPSHOT)
     return df.select(
         "row_key", *[F.element_at("data", c).alias(c) for c in columns]
     )
@@ -115,7 +170,7 @@ def scd2_merge(
     """
     path = os.path.join(store_dir, table + "_scd2")
     batch = changes.select("row_key", "data", "op", "ts")
-    hist = spark.read.parquet(path) if os.path.isdir(path) else None
+    hist = _read(spark, path, DIM_SCD2) if os.path.isdir(path) else None
 
     w = Window.partitionBy("row_key").orderBy("ts", "op")
     versioned = (
@@ -160,16 +215,17 @@ def scd2_merge(
         merged = hist.unionByName(versioned)
     else:
         merged = versioned
-    merged.write.mode("overwrite").parquet(path + "_new")
-    final = spark.read.parquet(path + "_new")
-    final.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    # a replay re-adds the batch's versions and closes each key's open
+    # version at or before its start: drop what no as-of read can see
+    live = F.col("valid_to").isNull() | (F.col("valid_to") > F.col("valid_from"))
+    _publish(merged.filter(live).dropDuplicates(["row_key", "valid_from", "valid_to"]), path)
+    return _read(spark, path, DIM_SCD2)
 
 
 def dim_as_of(spark: SparkSession, store_dir: str, table: str, ts: int) -> DataFrame:
     """Point-in-time dimension snapshot from the SCD2 history — the
     as-of join input for backfills (valid_from ≤ ts < valid_to)."""
-    hist = spark.read.parquet(os.path.join(store_dir, table + "_scd2"))
+    hist = _read(spark, os.path.join(store_dir, table + "_scd2"), DIM_SCD2)
     return hist.filter(
         (F.col("valid_from") <= ts)
         & (F.col("valid_to").isNull() | (F.col("valid_to") > ts))

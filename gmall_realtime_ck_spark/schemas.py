@@ -118,6 +118,23 @@ TABLE_PROCESS_DIM = StructType(
     ]
 )
 
+#: One DIM store table (gmall/dim.py): the live row per row_key, its
+#: `data` pruned to the config's sink_columns, `ts` of the last change.
+DIM_SNAPSHOT = StructType(
+    [StructField("row_key", S), StructField("data", MapType(S, S)), StructField("ts", L)]
+)
+
+#: One SCD2 DIM history table: a version is live for valid_from <= ts <
+#: valid_to; valid_to NULL is the open (current) version.
+DIM_SCD2 = StructType(
+    [
+        StructField("row_key", S),
+        StructField("data", MapType(S, S)),
+        StructField("valid_from", L),
+        StructField("valid_to", L),
+    ]
+)
+
 #: gmall_config.table_process_dwd (TableProcessDwd.java:15-29)
 TABLE_PROCESS_DWD = StructType(
     [

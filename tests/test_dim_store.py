@@ -1,0 +1,178 @@
+"""The DIM store's publish path: each merge writes its snapshot once and
+commits it with a pointer swap, reads declare the schema, a replayed
+batch converges, and a crash mid-merge leaves the previous snapshot."""
+
+from __future__ import annotations
+
+import json
+import os
+
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
+
+from gmall_realtime_ck_spark.gmall import dim, fixtures
+
+T = "dim_base_trademark"
+CHANGES = "sink_table string, row_key string, data map<string,string>, op string, ts bigint"
+
+# (row_key, tm_name, op, ts): b2 updates and deletes b1's keys, and
+# writes one key twice
+B1 = [("1", "a", "U", 100), ("2", "b", "U", 100), ("3", "c", "U", 100), ("1", "a2", "U", 150)]
+B2 = [("2", "b2", "U", 200), ("3", None, "D", 250), ("4", "d", "U", 200),
+      ("4", "d2", "U", 260), ("1", "a3", "U", 300)]
+
+
+def _changes(spark, rows):
+    return spark.createDataFrame(
+        [(T, key, {"id": key, "tm_name": name}, op, ts) for key, name, op, ts in rows], CHANGES
+    )
+
+
+def _lww(*batches):
+    """Plain-Python last-write-wins: per key the change with the greatest
+    (ts, op), an upsert "U" beating a delete "D" at equal ts."""
+    last = {}
+    for key, name, op, ts in (row for batch in batches for row in batch):
+        if key not in last or (ts, op) > last[key][1:]:
+            last[key] = (name, ts, op)
+    return {key: name for key, (name, _, op) in last.items() if op == "U"}
+
+
+def _names(spark, store):
+    return {r["row_key"]: r["tm_name"]
+            for r in dim.dim_snapshot(spark, store, T, ["tm_name"]).collect()}
+
+
+def _rows(df):
+    """A store table as a sorted list, duplicates kept."""
+    return sorted(((tuple(sorted(r["data"].items())),) + tuple(r[c] for c in df.columns if c != "data")
+                   for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("merge", ["merge_dim_batch", "scd2_merge"])
+def test_replayed_batch_leaves_store_unchanged(spark, tmp_path, merge):
+    """A batch re-run after a crash (same rows again) converges: the
+    snapshot, and the SCD2 history, equal those after its first run."""
+    store = str(tmp_path / "store")
+
+    def apply(rows):
+        if merge == "merge_dim_batch":
+            return dim.merge_dim_batch(spark, _changes(spark, rows), store)[T]
+        return dim.scd2_merge(spark, _changes(spark, rows), store, T)
+
+    apply(B1)
+    once = _rows(apply(B2))
+    assert _rows(apply(B2)) == once
+
+
+def _fixture_lines(source, ids, ts):
+    """Maxwell inserts for one table of fixtures.TABLE_PROCESS_DIM_ROWS."""
+    _, _, cols, _, key = next(r for r in fixtures.TABLE_PROCESS_DIM_ROWS if r[0] == source)
+    return [json.dumps({"database": "gmall", "table": source, "type": "insert", "ts": ts,
+                        "data": {c: (str(i) if c == key else f"{c}-{i}") for c in cols.split(",")}})
+            for i in ids]
+
+
+def test_dim_reads_run_no_job_and_a_merge_few(spark, tmp_path):
+    """Reads declare the store's schema, so reading every dim table runs
+    no Spark job; a merge touching one table writes its snapshot once."""
+    store = str(tmp_path / "store")
+    lines = [l for r in fixtures.TABLE_PROCESS_DIM_ROWS for l in _fixture_lines(r[0], range(20), 1)]
+    raw = spark.createDataFrame([(l,) for l in lines], "value string")
+    tables = dim.run_dim_pipeline(spark, raw, fixtures.TABLE_PROCESS_DIM_ROWS, store)
+    assert sorted(tables) == sorted(r[1] for r in fixtures.TABLE_PROCESS_DIM_ROWS)
+    raw2 = spark.createDataFrame([(l,) for l in _fixture_lines("base_trademark", [3, 30], 2)],
+                                 "value string")
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("dim-reads", "read every dim table")
+        for _, table, cols, _, _ in fixtures.TABLE_PROCESS_DIM_ROWS:
+            dim.dim_snapshot(spark, store, table, cols.split(","))
+        sc.setJobGroup("dim-merge", "merge a batch touching one table")
+        merged = dim.run_dim_pipeline(spark, raw2, fixtures.TABLE_PROCESS_DIM_ROWS, store)
+        sc.setJobGroup("dim-after", "checks")
+        assert tracker.getJobIdsForGroup("dim-reads") == []
+        assert len(tracker.getJobIdsForGroup("dim-merge")) <= 6
+        assert merged[T].count() == 21
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_merge_over_table_without_pointer(spark, tmp_path):
+    """A table staged as a plain parquet directory (an initial load, or a
+    store written before the pointer existed) is merged last-write-wins,
+    and later reads see the committed version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = str(tmp_path / "store")
+    path = os.path.join(store, T)
+    os.makedirs(path)
+    staged = [("1", "a2", 150), ("2", "b", 100), ("3", "c", 100)]  # B1, merged
+    pq.write_table(
+        pa.table({"row_key": [k for k, _, _ in staged],
+                  "data": pa.array([[("id", k), ("tm_name", n)] for k, n, _ in staged],
+                                   pa.map_(pa.string(), pa.string())),
+                  "ts": pa.array([ts for _, _, ts in staged], pa.int64())}),
+        os.path.join(path, "part-00000.parquet"),
+    )
+    assert _names(spark, store) == _lww(B1)
+    merged = dim.merge_dim_batch(spark, _changes(spark, B2), store)[T]
+    expected = _lww(B1, B2)
+    assert {r["row_key"]: r["data"]["tm_name"] for r in merged.collect()} == expected
+    assert _names(spark, store) == expected
+    assert "part-00000.parquet" not in os.listdir(path)
+
+
+def _crash_writes_into(monkeypatch, table_dir):
+    """Make every parquet write into ``table_dir`` fail while its tasks
+    run (each row raises), leaving what a failed Spark write leaves. The
+    failing write keeps the caller's save mode, so an overwrite still
+    deletes its target first."""
+    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
+
+    def mode(self, save_mode):
+        self.save_mode = save_mode
+        return real_mode(self, save_mode)
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.commonpath([path, table_dir]) != table_dir:
+            return real_parquet(self, path, *args, **kwargs)
+        boom = F.when(F.col("row_key").isNotNull(), F.raise_error(F.lit("injected crash")))
+        failing = self._df.withColumn("row_key", boom.otherwise(F.col("row_key"))).write
+        failing = failing.mode(getattr(self, "save_mode", "errorifexists"))
+        return real_parquet(failing, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "mode", mode)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def _crash_commit(monkeypatch, table_dir):
+    """Make the rename that commits a written snapshot fail."""
+
+    def replace(src, dst):
+        raise OSError("injected crash before the commit")
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
+@pytest.mark.parametrize("inject", [_crash_writes_into, _crash_commit], ids=["write", "commit"])
+def test_crash_in_merge_keeps_previous_snapshot(spark, tmp_path, inject):
+    """A merge that dies while writing its snapshot, or after writing it
+    but before the commit, leaves the store reading the previous
+    snapshot; the next merge of the same batch then succeeds."""
+    store = str(tmp_path / "store")
+    dim.merge_dim_batch(spark, _changes(spark, B1), store)
+    assert _names(spark, store) == _lww(B1)
+
+    with pytest.MonkeyPatch.context() as m:
+        inject(m, os.path.join(store, T))
+        with pytest.raises(Exception, match="injected crash"):
+            dim.merge_dim_batch(spark, _changes(spark, B2), store)
+    assert _names(spark, store) == _lww(B1)
+
+    dim.merge_dim_batch(spark, _changes(spark, B2), store)
+    assert _names(spark, store) == _lww(B1, B2)

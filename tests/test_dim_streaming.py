@@ -35,7 +35,7 @@ def test_dim_merge_under_foreachbatch(spark, tmp_path):
     q = foreach_batch_pipeline(raw, transform, writer, checkpoint=str(tmp_path / "ck"))
     q.awaitTermination()
 
-    sku = spark.read.parquet(f"{store}/dim_sku_info")
+    sku = dim.dim_snapshot(spark, store, "dim_sku_info", ["sku_name"])
     assert sku.count() == 35
 
     # a second stream delivering an update + delete converges the store
@@ -55,7 +55,7 @@ def test_dim_merge_under_foreachbatch(spark, tmp_path):
     q2 = foreach_batch_pipeline(raw2, transform, writer, checkpoint=str(tmp_path / "ck2"))
     q2.awaitTermination()
 
-    sku2 = spark.read.parquet(f"{store}/dim_sku_info")
+    sku2 = dim.dim_snapshot(spark, store, "dim_sku_info", ["sku_name"])
     assert sku2.count() == 34  # delete applied
-    renamed = sku2.filter(F.col("row_key") == "3").collect()[0]["data"]["sku_name"]
+    renamed = sku2.filter(F.col("row_key") == "3").collect()[0]["sku_name"]
     assert renamed == "renamed"

@@ -237,6 +237,8 @@ def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
     import json
     import os
 
+    from gmall_realtime_ck_spark.schemas import DIM_SNAPSHOT
+
     def sku_lines(ids, ts):
         return [
             json.dumps({"database": "gmall", "table": "sku_info", "type": "insert",
@@ -250,14 +252,14 @@ def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
 
     store = str(tmp_path / "dimstore")
     assert merge(sku_lines(range(100), 1))["dim_sku_info"].count() == 100
-    path = os.path.join(store, "dim_sku_info")
-    schema = spark.read.parquet(path).schema
-    with open(os.path.join(path, "part-0.parquet"), "wb") as f:
+    live = dim._live(os.path.join(store, "dim_sku_info"))  # the committed snapshot
+    with open(os.path.join(live, "part-0.parquet"), "wb") as f:
         f.write(b"torn")  # sorts before every part file Spark wrote
 
     with pytest.raises(Exception):
         merge(sku_lines([100], 2))
-    kept = spark.read.schema(schema).option("ignoreCorruptFiles", "true").parquet(path)
+    kept = (spark.read.schema(DIM_SNAPSHOT).option("ignoreCorruptFiles", "true")
+            .parquet(dim._live(os.path.join(store, "dim_sku_info"))))
     assert kept.count() == 100
 
 

@@ -14,7 +14,7 @@ mapfile -t FILES < <(ls tests/test_*.py)
 for ((i=0; i<N; i++)); do
   SHARD=()
   for ((j=i; j<${#FILES[@]}; j+=N)); do SHARD+=("${FILES[$j]}"); done
-  ( python -m pytest "${SHARD[@]}" -q > "$OUT/shard_$i.log" 2>&1; echo $? > "$OUT/shard_$i.rc" ) &
+  ( python -m pytest "${SHARD[@]}" -q -p no:cacheprovider --continue-on-collection-errors > "$OUT/shard_$i.log" 2>&1; echo $? > "$OUT/shard_$i.rc" ) &
 done
 wait
 RC=0
