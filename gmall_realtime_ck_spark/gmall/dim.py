@@ -7,12 +7,13 @@ matches rows against the broadcast table_process_dim config
 (HBaseSinkFunction.java:36-65).
 
 Spark-first: dim tables are parquet (Delta-style MERGE semantics done
-manually — last-write-wins by (rowkey, ts), deletes applied), kept
+manually — last-write-wins by (ts, op) per rowkey, deletes applied), kept
 small and broadcast-joined by consumers, which removes the need for
 the Redis/HBase cache hierarchy entirely (SURVEY §2.4 J6).
 
-Store layout: one directory per table, ``<store>/<table>/`` (SCD2
-history: ``<store>/<table>_scd2/``). A merge writes its whole new
+Store layout: one directory per table, ``<store>/<table>/`` holding
+the snapshot (one live row per key), and ``<store>/<table>_scd2/``
+holding the SCD2 history as change rows. A merge writes its whole new
 snapshot once, into a fresh version directory ``_v<N>``, then commits
 it by writing the version's name to ``_CURRENT.tmp`` and
 ``os.replace``-ing that over ``_CURRENT``: the rename is the commit
@@ -20,14 +21,15 @@ point. It then deletes every other entry of the table directory
 (replaced versions, failed attempts). Readers resolve ``_CURRENT``; a
 table directory without one is read as a plain parquet table, which is
 how an initial load may be staged. Every read declares the store's
-schema (``schemas.DIM_SNAPSHOT`` / ``schemas.DIM_SCD2``), so it runs no
+schema (``schemas.DIM_SNAPSHOT`` / ``schemas.DIM_CHANGE``), so it runs no
 Spark job and never has to infer a schema from the files.
 
 Crash contract: a merge that fails or dies at any point before the
 rename leaves ``_CURRENT`` naming the previous version, so readers and
 the next merge see the previous snapshot, and the partial directory is
 swept by the next commit. A replayed batch converges to the same
-snapshot and the same history. The sweep deletes the replaced version,
+snapshot and the same history; the history is also the same whatever
+order batches arrive in. The sweep deletes the replaced version,
 so a DataFrame read before a merge must be evaluated before it.
 """
 
@@ -40,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..schemas import DIM_SCD2, DIM_SNAPSHOT, TABLE_PROCESS_DIM
+from ..schemas import DIM_CHANGE, DIM_SNAPSHOT, TABLE_PROCESS_DIM
 from .dwd import parse_topic_db
 
 _POINTER = "_CURRENT"
@@ -113,12 +115,25 @@ def dim_changes(db: DataFrame, config: DataFrame) -> DataFrame:
     )
 
 
+def _latest(changes: DataFrame) -> DataFrame:
+    """The one last-write rule: per row_key, the change with the greatest
+    (ts, op), so an upsert "U" beats a delete "D" at equal ts; keys
+    whose latest change is a delete are dropped."""
+    w = Window.partitionBy("row_key").orderBy(F.desc("ts"), F.desc("op"))
+    return (
+        changes.withColumn("rn", F.row_number().over(w))
+        .filter((F.col("rn") == 1) & (F.col("op") != "D"))
+        .select("row_key", "data", "ts")
+    )
+
+
 def merge_dim_batch(
     spark: SparkSession, changes: DataFrame, store_dir: str
 ) -> dict[str, DataFrame]:
     """K9 — apply a batch of dim changes to the parquet dim store:
-    per sink_table, last-write-wins by (row_key, ts desc), deletes
-    removed. Returns the new snapshots (also committed to store_dir).
+    per sink_table, the stored snapshot plus the batch reduced by
+    ``_latest`` (last write by (ts, op) per row_key, deletes removed).
+    Returns the new snapshots (also committed to store_dir).
     Called from foreachBatch in streaming; idempotent per batch
     (replays converge to the same snapshot).
     """
@@ -135,13 +150,7 @@ def merge_dim_batch(
                 "row_key", "data", F.lit("U").alias("op"), "ts"
             )
             merged = existing.unionByName(batch)
-        w = Window.partitionBy("row_key").orderBy(F.desc("ts"), F.desc("op"))
-        snapshot = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") != "D"))
-            .select("row_key", "data", "ts")
-        )
-        _publish(snapshot, path)
+        _publish(_latest(merged), path)
         out[table] = _read(spark, path, DIM_SNAPSHOT)
     return out
 
@@ -159,77 +168,48 @@ def scd2_merge(
     spark: SparkSession, changes: DataFrame, store_dir: str, table: str
 ) -> DataFrame:
     """SCD-Type-2 variant of the dim sink: instead of last-write-wins,
-    keep full version history — each change closes the key's open
-    version (valid_to = change ts) and, unless it is a delete, opens a
-    new one (valid_from = ts, valid_to = NULL). Beyond the reference's
-    overwrite-only HBase sink (HBaseSinkFunction.java:36-65): enables
-    as-of dimension joins for backfills.
+    keep full version history. Beyond the reference's overwrite-only
+    HBase sink (HBaseSinkFunction.java:36-65): enables as-of dimension
+    joins for backfills.
+
+    The history is stored as the change rows themselves
+    (``schemas.DIM_CHANGE``, one row per (row_key, ts, op)): a merge
+    unions the batch into them, drops duplicates and publishes the
+    result. The stored set is therefore the same whatever order batches
+    arrive in and however often one is replayed. Versions are derived
+    on read by the chaining ``operators/relational.py::
+    table_scd2_history`` uses: each non-delete change opens
+    [ts, next change's ts) by (ts, op) per key, so a delete or a later
+    upsert closes it. The dedup leaves at most one upsert per
+    (row_key, ts), so no version has zero length. No caller outside
+    the tests writes an SCD2 store, so no store in the earlier
+    (valid_from, valid_to) layout exists and none is migrated.
 
     ``changes``: dim_changes() output filtered to one sink_table.
-    Returns the new history DataFrame (also persisted).
+    Returns the new history as (row_key, data, valid_from, valid_to),
+    valid_to NULL for the current version.
     """
     path = os.path.join(store_dir, table + "_scd2")
-    batch = changes.select("row_key", "data", "op", "ts")
-    hist = _read(spark, path, DIM_SCD2) if os.path.isdir(path) else None
+    log = changes.select("row_key", "data", "op", "ts")
+    if os.path.isdir(path):
+        log = _read(spark, path, DIM_CHANGE).unionByName(log)
+    _publish(log.dropDuplicates(["row_key", "ts", "op"]), path)
 
     w = Window.partitionBy("row_key").orderBy("ts", "op")
-    versioned = (
-        batch.withColumn("valid_from", F.col("ts"))
-        .withColumn("valid_to", F.lead("ts").over(w))
-        .filter(F.col("op") != "D")
-        .select("row_key", "data", "valid_from", "valid_to")
+    versions = _read(spark, path, DIM_CHANGE).select(
+        "row_key", "data", "op",
+        F.col("ts").alias("valid_from"), F.lead("ts").over(w).alias("valid_to"),
     )
-    # deletes close the predecessor (lead already did) and add no row;
-    # a delete with no successor leaves valid_to = its ts via a second pass
-    closes = (
-        batch.filter(F.col("op") == "D")
-        .select("row_key", F.col("ts").alias("del_ts"))
-    )
-    versioned = (
-        versioned.join(closes, "row_key", "left")
-        .withColumn(
-            "valid_to",
-            F.when(
-                F.col("valid_to").isNull()
-                & F.col("del_ts").isNotNull()
-                & (F.col("del_ts") > F.col("valid_from")),
-                F.col("del_ts"),
-            ).otherwise(F.col("valid_to")),
-        )
-        .drop("del_ts")
-    )
-    if hist is not None:
-        # close open history rows at the batch's first new version per key
-        first_new = batch.groupBy("row_key").agg(F.min("ts").alias("new_ts"))
-        hist = (
-            hist.join(first_new, "row_key", "left")
-            .withColumn(
-                "valid_to",
-                F.when(
-                    F.col("valid_to").isNull() & F.col("new_ts").isNotNull(),
-                    F.col("new_ts"),
-                ).otherwise(F.col("valid_to")),
-            )
-            .drop("new_ts")
-        )
-        merged = hist.unionByName(versioned)
-    else:
-        merged = versioned
-    # a replay re-adds the batch's versions and closes each key's open
-    # version at or before its start: drop what no as-of read can see
-    live = F.col("valid_to").isNull() | (F.col("valid_to") > F.col("valid_from"))
-    _publish(merged.filter(live).dropDuplicates(["row_key", "valid_from", "valid_to"]), path)
-    return _read(spark, path, DIM_SCD2)
+    return versions.filter(F.col("op") != "D").drop("op")
 
 
 def dim_as_of(spark: SparkSession, store_dir: str, table: str, ts: int) -> DataFrame:
     """Point-in-time dimension snapshot from the SCD2 history — the
-    as-of join input for backfills (valid_from ≤ ts < valid_to)."""
-    hist = _read(spark, os.path.join(store_dir, table + "_scd2"), DIM_SCD2)
-    return hist.filter(
-        (F.col("valid_from") <= ts)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > ts))
-    ).select("row_key", "data")
+    as-of join input for backfills: ``_latest`` over the changes up to
+    ``ts``, the rule ``merge_dim_batch`` applies, so a read after the
+    last change equals the snapshot."""
+    log = _read(spark, os.path.join(store_dir, table + "_scd2"), DIM_CHANGE)
+    return _latest(log.filter(F.col("ts") <= ts)).select("row_key", "data")
 
 
 def run_dim_pipeline(

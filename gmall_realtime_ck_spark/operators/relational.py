@@ -2542,7 +2542,7 @@ def table_scd2_history(t: dict[str, DataFrame]) -> DataFrame:
     version's ts, open for the live version) and an ``is_current``
     flag; a trailing delete closes the last version without emitting a
     row — the DimUtil/SCD2 merge of the reference's HBase dim layer
-    (gmall/dim.py::scd2 applies the same chaining incrementally) as
+    (gmall/dim.py::scd2_merge applies the same chaining on read) as
     one oracled batch build.
 
     Plan: the canonical SCD2 shape — ONE keyed window (lead over

@@ -124,14 +124,15 @@ DIM_SNAPSHOT = StructType(
     [StructField("row_key", S), StructField("data", MapType(S, S)), StructField("ts", L)]
 )
 
-#: One SCD2 DIM history table: a version is live for valid_from <= ts <
-#: valid_to; valid_to NULL is the open (current) version.
-DIM_SCD2 = StructType(
+#: One SCD2 DIM history table: the change rows themselves, one per
+#: (row_key, ts, op), op "U" (upsert) or "D" (delete); versions are
+#: derived on read (gmall/dim.py::scd2_merge).
+DIM_CHANGE = StructType(
     [
         StructField("row_key", S),
         StructField("data", MapType(S, S)),
-        StructField("valid_from", L),
-        StructField("valid_to", L),
+        StructField("op", S),
+        StructField("ts", L),
     ]
 )
 

@@ -31,12 +31,11 @@ def jdbc_batch_writer(
     driver: str | None = None,
     batchsize: int = 1000,
     transient_cols: tuple[str, ...] = (),
-    mode: str = "append",
     properties: dict | None = None,
 ):
     """K6/K7 — a foreachBatch writer: drops @TransientSink-style columns
     (TransientSink.java:13-16; the reference's reflection filler skips
-    them at ClickHouseUtil.java:38-47), writes with JDBC batching.
+    them at ClickHouseUtil.java:38-47), appends with JDBC batching.
 
     Usage::
 
@@ -52,7 +51,7 @@ def jdbc_batch_writer(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         out = batch_df.drop(*transient_cols) if transient_cols else batch_df
-        out.write.mode(mode).options(**props).jdbc(url, table, properties=props)
+        out.write.jdbc(url, table, mode="append", properties=props)
 
     return write
 

@@ -50,20 +50,22 @@ def _rows(df):
                    for r in df.collect()), key=repr)
 
 
+def _apply(spark, store, merge, rows):
+    """Merge one batch through either DIM sink; returns what it returns
+    for the table."""
+    if merge == "merge_dim_batch":
+        return dim.merge_dim_batch(spark, _changes(spark, rows), store)[T]
+    return dim.scd2_merge(spark, _changes(spark, rows), store, T)
+
+
 @pytest.mark.parametrize("merge", ["merge_dim_batch", "scd2_merge"])
 def test_replayed_batch_leaves_store_unchanged(spark, tmp_path, merge):
     """A batch re-run after a crash (same rows again) converges: the
     snapshot, and the SCD2 history, equal those after its first run."""
     store = str(tmp_path / "store")
-
-    def apply(rows):
-        if merge == "merge_dim_batch":
-            return dim.merge_dim_batch(spark, _changes(spark, rows), store)[T]
-        return dim.scd2_merge(spark, _changes(spark, rows), store, T)
-
-    apply(B1)
-    once = _rows(apply(B2))
-    assert _rows(apply(B2)) == once
+    _apply(spark, store, merge, B1)
+    once = _rows(_apply(spark, store, merge, B2))
+    assert _rows(_apply(spark, store, merge, B2)) == once
 
 
 def _fixture_lines(source, ids, ts):
@@ -159,20 +161,52 @@ def _crash_commit(monkeypatch, table_dir):
     monkeypatch.setattr(os, "replace", replace)
 
 
+TIMES = sorted({ts for *_, ts in B1 + B2}) + [1000]  # every change ts, and after the last
+
+
+def _read(spark, store, merge):
+    """The snapshot, or the SCD2 history read as-of at each of TIMES."""
+    if merge == "merge_dim_batch":
+        return _names(spark, store)
+    return {t: {r["row_key"]: r["data"]["tm_name"]
+                for r in dim.dim_as_of(spark, store, T, t).collect()} for t in TIMES}
+
+
+def _model(merge, *batches):
+    """What ``_read`` returns after ``batches``, in plain Python."""
+    if merge == "merge_dim_batch":
+        return _lww(*batches)
+    return {t: _lww(*[[row for row in batch if row[3] <= t] for batch in batches]) for t in TIMES}
+
+
 @pytest.mark.parametrize("inject", [_crash_writes_into, _crash_commit], ids=["write", "commit"])
-def test_crash_in_merge_keeps_previous_snapshot(spark, tmp_path, inject):
-    """A merge that dies while writing its snapshot, or after writing it
-    but before the commit, leaves the store reading the previous
-    snapshot; the next merge of the same batch then succeeds."""
+@pytest.mark.parametrize("merge", ["merge_dim_batch", "scd2_merge"])
+def test_crash_in_merge_keeps_previous_snapshot(spark, tmp_path, merge, inject):
+    """A merge that dies while writing its snapshot (or SCD2 history), or
+    after writing it but before the commit, leaves the store reading the
+    previous one; the next merge of the same batch then succeeds."""
     store = str(tmp_path / "store")
-    dim.merge_dim_batch(spark, _changes(spark, B1), store)
-    assert _names(spark, store) == _lww(B1)
+    _apply(spark, store, merge, B1)
+    assert _read(spark, store, merge) == _model(merge, B1)
 
     with pytest.MonkeyPatch.context() as m:
-        inject(m, os.path.join(store, T))
+        inject(m, os.path.join(store, T if merge == "merge_dim_batch" else T + "_scd2"))
         with pytest.raises(Exception, match="injected crash"):
-            dim.merge_dim_batch(spark, _changes(spark, B2), store)
-    assert _names(spark, store) == _lww(B1)
+            _apply(spark, store, merge, B2)
+    assert _read(spark, store, merge) == _model(merge, B1)
 
-    dim.merge_dim_batch(spark, _changes(spark, B2), store)
-    assert _names(spark, store) == _lww(B1, B2)
+    _apply(spark, store, merge, B2)
+    assert _read(spark, store, merge) == _model(merge, B1, B2)
+
+
+def test_as_of_after_last_change_equals_snapshot(spark, tmp_path):
+    """One last-write rule: the same batches applied through both sinks
+    give an as-of read at the last change ts equal to the snapshot, and
+    both equal the plain-Python last write."""
+    store = str(tmp_path / "store")
+    for rows in (B1, B2):
+        for merge in ("merge_dim_batch", "scd2_merge"):
+            _apply(spark, store, merge, rows)
+    last = max(ts for *_, ts in B1 + B2)
+    as_of = {r["row_key"]: r["data"]["tm_name"] for r in dim.dim_as_of(spark, store, T, last).collect()}
+    assert as_of == _names(spark, store) == _lww(B1, B2)
