@@ -9,20 +9,38 @@ matches rows against the broadcast table_process_dim config
 Spark-first: dim tables are parquet (Delta-style MERGE semantics done
 manually — last-write-wins by (ts, op) per rowkey, deletes applied), kept
 small and broadcast-joined by consumers, which removes the need for
-the Redis/HBase cache hierarchy entirely (SURVEY §2.4 J6).
+HBase lookups (SURVEY §2.4 J6); the snapshot held on the driver (below)
+takes the Redis cache's place for the merge.
 
 Store layout: one directory per table, ``<store>/<table>/`` holding
 the snapshot (one live row per key), and ``<store>/<table>_scd2/``
 holding the SCD2 history as change rows. A merge writes its whole new
-snapshot once, into a fresh version directory ``_v<N>``, then commits
+snapshot once, into a fresh version directory ``v<N>``, then commits
 it by writing the version's name to ``_CURRENT.tmp`` and
 ``os.replace``-ing that over ``_CURRENT``: the rename is the commit
 point. It then deletes every other entry of the table directory
 (replaced versions, failed attempts). Readers resolve ``_CURRENT``; a
-table directory without one is read as a plain parquet table, which is
-how an initial load may be staged. Every read declares the store's
-schema (``schemas.DIM_SNAPSHOT`` / ``schemas.DIM_CHANGE``), so it runs no
-Spark job and never has to infer a schema from the files.
+table directory without one is read as a plain parquet table (its own
+files, not the uncommitted versions inside it), which is how an initial
+load may be staged. Every read declares the store's schema
+(``schemas.DIM_SNAPSHOT`` / ``schemas.DIM_CHANGE``), so it runs no
+Spark job and never has to infer a schema from the files. Versions
+are named without a leading ``_``, which Spark's file index would
+hide; a store committed under the older ``_v<N>`` names reads as
+before, and its next version is numbered past them.
+
+Driver-held snapshot: the process keeps each snapshot table's
+committed version on the driver, as ``{row_key: (data, ts)}``, keyed
+by the version's directory and its inode and mtime. A merge collects
+the batch's changes once (2 Spark jobs: the config broadcast and the
+scan, whatever the tables touched), applies them to the held rows with
+the last-write rule, and writes the new version with pyarrow as one
+file; it reads the store only when the held copy is not the committed
+version (the first merge in a process, a commit by another writer, a
+staged table without a pointer). The held rows are the rows the
+enrichment joins already collect to the driver to broadcast, so holding
+them needs the driver memory those joins need anyway. One writer per
+store is assumed, as with the reference's single DimApp.
 
 Crash contract: a merge that fails or dies at any point before the
 rename leaves ``_CURRENT`` naming the previous version, so readers and
@@ -36,8 +54,12 @@ so a DataFrame read before a merge must be evaluated before it.
 from __future__ import annotations
 
 import os
+import re
 import shutil
+from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -46,6 +68,10 @@ from ..schemas import DIM_CHANGE, DIM_SNAPSHOT, TABLE_PROCESS_DIM
 from .dwd import parse_topic_db
 
 _POINTER = "_CURRENT"
+_VERSION = re.compile(r"_?v(\d+)")  # v<N>, and the older _v<N>
+
+#: table directory -> (committed version's identity, {row_key: (data, ts)})
+_HELD: dict[str, tuple[tuple, dict]] = {}
 
 
 def _live(path: str) -> str:
@@ -59,17 +85,24 @@ def _live(path: str) -> str:
 
 
 def _read(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return spark.read.schema(schema).parquet(_live(path))
+    live = _live(path)
+    if live == path and os.path.isdir(path):  # staged: skip versions not yet committed
+        staged = sorted(os.path.join(path, e) for e in os.listdir(path)
+                        if not e.startswith(("_", ".")) and not _VERSION.fullmatch(e))
+        if not staged:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*staged)
+    return spark.read.schema(schema).parquet(live)
 
 
-def _publish(df: DataFrame, path: str) -> None:
-    """Write ``df`` once as a new version of the table at ``path``,
-    commit it by renaming the pointer over the old one, then delete
-    what it replaced."""
+def _publish(path: str, write: Callable[[str], None]) -> None:
+    """Have ``write`` write a new version of the table at ``path`` into
+    the directory it is given, commit it by renaming the pointer over
+    the old one, then delete what it replaced."""
     os.makedirs(path, exist_ok=True)
-    done = [int(e[2:]) for e in os.listdir(path) if e.startswith("_v") and e[2:].isdigit()]
-    version = f"_v{max(done, default=0) + 1}"  # never reuses a failed attempt's name
-    df.write.parquet(os.path.join(path, version))
+    done = [int(m.group(1)) for m in map(_VERSION.fullmatch, os.listdir(path)) if m]
+    version = f"v{max(done, default=0) + 1}"  # never reuses a failed attempt's name
+    write(os.path.join(path, version))
     tmp = os.path.join(path, _POINTER + ".tmp")
     with open(tmp, "w") as f:
         f.write(version)
@@ -118,7 +151,9 @@ def dim_changes(db: DataFrame, config: DataFrame) -> DataFrame:
 def _latest(changes: DataFrame) -> DataFrame:
     """The one last-write rule: per row_key, the change with the greatest
     (ts, op), so an upsert "U" beats a delete "D" at equal ts; keys
-    whose latest change is a delete are dropped."""
+    whose latest change is a delete are dropped. This is the Spark form
+    ``dim_as_of`` uses; ``_apply`` is the same rule on driver rows, for
+    ``merge_dim_batch``."""
     w = Window.partitionBy("row_key").orderBy(F.desc("ts"), F.desc("op"))
     return (
         changes.withColumn("rn", F.row_number().over(w))
@@ -127,30 +162,83 @@ def _latest(changes: DataFrame) -> DataFrame:
     )
 
 
+def _rank(ts, op) -> tuple:
+    """``_latest``'s order: (ts, op), a NULL ts lowest."""
+    return (ts is not None, ts or 0, op)
+
+
+def _apply(held: dict, changes: list) -> dict:
+    """``_latest`` over the held rows, counted as upserts, and a batch's
+    (row_key, data, op, ts) changes. On an exact tie the earlier row
+    wins: a stored row over a batch row, the first of equal batch rows."""
+    last = {key: (data, ts, "U") for key, (data, ts) in held.items()}
+    for key, data, op, ts in changes:
+        if key not in last or _rank(ts, op) > _rank(*last[key][1:]):
+            last[key] = (data, ts, op)
+    return {key: (data, ts) for key, (data, ts, op) in last.items() if op != "D"}
+
+
+def _identity(path: str) -> tuple:
+    """What names a table's committed version: its directory, inode and
+    mtime, so a commit by another writer (or a file added to the
+    version) is seen."""
+    live = _live(path)
+    st = os.stat(live)
+    return live, st.st_ino, st.st_mtime_ns
+
+
+def _held(spark: SparkSession, path: str) -> dict:
+    """The committed snapshot of the table at ``path`` as
+    ``{row_key: (data, ts)}``: the copy held since this process's last
+    commit to it if that is still the committed version, else the
+    store's rows (an unreadable store raises)."""
+    if not os.path.isdir(path):
+        return {}
+    key = _identity(path)
+    hit = _HELD.get(path)
+    if hit is not None and hit[0] == key:
+        return hit[1]
+    return {r["row_key"]: (r["data"], r["ts"]) for r in _read(spark, path, DIM_SNAPSHOT).collect()}
+
+
+def _write_snapshot(rows: dict, directory: str) -> None:
+    """One parquet file of ``rows`` in the ``schemas.DIM_SNAPSHOT`` layout."""
+    os.makedirs(directory)
+    table = pa.table(
+        {"row_key": pa.array(list(rows), pa.string()),
+         "data": pa.array([None if d is None else list(d.items()) for d, _ in rows.values()],
+                          pa.map_(pa.string(), pa.string())),
+         "ts": pa.array([ts for _, ts in rows.values()], pa.int64())}
+    )
+    pq.write_table(table, os.path.join(directory, "part-00000.parquet"))
+
+
 def merge_dim_batch(
     spark: SparkSession, changes: DataFrame, store_dir: str
 ) -> dict[str, DataFrame]:
     """K9 — apply a batch of dim changes to the parquet dim store:
-    per sink_table, the stored snapshot plus the batch reduced by
-    ``_latest`` (last write by (ts, op) per row_key, deletes removed).
-    Returns the new snapshots (also committed to store_dir).
-    Called from foreachBatch in streaming; idempotent per batch
-    (replays converge to the same snapshot).
+    per sink_table, the committed snapshot plus the batch reduced by the
+    last-write rule (``_apply``: last write by (ts, op) per row_key,
+    deletes removed). Returns the new snapshots (also committed to
+    store_dir), each a lazy read that runs no job until used.
+
+    The batch is collected once, and applied on the driver to each
+    table's held snapshot (module docstring); the new version is written
+    with pyarrow. A merge therefore runs 2 Spark jobs (the config
+    broadcast and the scan of ``changes``) however many tables it
+    touches, plus one read per table whose held copy is not the
+    committed version. Called from foreachBatch in streaming; idempotent
+    per batch (replays converge to the same snapshot).
     """
+    by_table: dict[str, list] = {}
+    for table, *change in changes.select("sink_table", "row_key", "data", "op", "ts").collect():
+        by_table.setdefault(table, []).append(change)
     out: dict[str, DataFrame] = {}
-    tables = [r[0] for r in changes.select("sink_table").distinct().collect()]
-    for table in sorted(tables):
-        batch = changes.filter(F.col("sink_table") == table).select(
-            "row_key", "data", "op", "ts"
-        )
+    for table in sorted(by_table):
         path = os.path.join(store_dir, table)
-        merged = batch
-        if os.path.isdir(path):  # an unreadable store fails the write: no commit
-            existing = _read(spark, path, DIM_SNAPSHOT).select(
-                "row_key", "data", F.lit("U").alias("op"), "ts"
-            )
-            merged = existing.unionByName(batch)
-        _publish(_latest(merged), path)
+        rows = _apply(_held(spark, path), by_table[table])
+        _publish(path, lambda d: _write_snapshot(rows, d))
+        _HELD[path] = (_identity(path), rows)
         out[table] = _read(spark, path, DIM_SNAPSHOT)
     return out
 
@@ -193,7 +281,7 @@ def scd2_merge(
     log = changes.select("row_key", "data", "op", "ts")
     if os.path.isdir(path):
         log = _read(spark, path, DIM_CHANGE).unionByName(log)
-    _publish(log.dropDuplicates(["row_key", "ts", "op"]), path)
+    _publish(path, log.dropDuplicates(["row_key", "ts", "op"]).write.parquet)
 
     w = Window.partitionBy("row_key").orderBy("ts", "op")
     versions = _read(spark, path, DIM_CHANGE).select(

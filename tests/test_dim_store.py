@@ -1,12 +1,16 @@
 """The DIM store's publish path: each merge writes its snapshot once and
 commits it with a pointer swap, reads declare the schema, a replayed
-batch converges, and a crash mid-merge leaves the previous snapshot."""
+batch converges, a crash mid-merge leaves the previous snapshot, and
+the snapshot held on the driver follows the committed version."""
 
 from __future__ import annotations
 
 import json
 import os
+import random
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
@@ -44,6 +48,19 @@ def _names(spark, store):
             for r in dim.dim_snapshot(spark, store, T, ["tm_name"]).collect()}
 
 
+def _stage(directory, rows):
+    """Write ``rows`` ((row_key, tm_name, ts)) as one parquet file in the
+    snapshot layout, as an initial load (or an older writer) would."""
+    os.makedirs(directory)
+    pq.write_table(
+        pa.table({"row_key": [k for k, _, _ in rows],
+                  "data": pa.array([[("id", k), ("tm_name", n)] for k, n, _ in rows],
+                                   pa.map_(pa.string(), pa.string())),
+                  "ts": pa.array([ts for _, _, ts in rows], pa.int64())}),
+        os.path.join(directory, "part-00000.parquet"),
+    )
+
+
 def _rows(df):
     """A store table as a sorted list, duplicates kept."""
     return sorted(((tuple(sorted(r["data"].items())),) + tuple(r[c] for c in df.columns if c != "data")
@@ -78,7 +95,8 @@ def _fixture_lines(source, ids, ts):
 
 def test_dim_reads_run_no_job_and_a_merge_few(spark, tmp_path):
     """Reads declare the store's schema, so reading every dim table runs
-    no Spark job; a merge touching one table writes its snapshot once."""
+    no Spark job; a merge touching one table runs only the scan of its
+    changes (the config broadcast and the scan)."""
     store = str(tmp_path / "store")
     lines = [l for r in fixtures.TABLE_PROCESS_DIM_ROWS for l in _fixture_lines(r[0], range(20), 1)]
     raw = spark.createDataFrame([(l,) for l in lines], "value string")
@@ -97,30 +115,48 @@ def test_dim_reads_run_no_job_and_a_merge_few(spark, tmp_path):
         merged = dim.run_dim_pipeline(spark, raw2, fixtures.TABLE_PROCESS_DIM_ROWS, store)
         sc.setJobGroup("dim-after", "checks")
         assert tracker.getJobIdsForGroup("dim-reads") == []
-        assert len(tracker.getJobIdsForGroup("dim-merge")) <= 6
+        assert len(tracker.getJobIdsForGroup("dim-merge")) <= 2
         assert merged[T].count() == 21
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_merge_runs_two_jobs_however_many_tables(spark, tmp_path):
+    """A merge collects its changes once and applies them to the
+    snapshots held on the driver: batches touching 1, 3 or all 4 dim
+    tables each run at most 2 Spark jobs, and read no store."""
+    store = str(tmp_path / "store")
+    lines = [l for r in fixtures.TABLE_PROCESS_DIM_ROWS for l in _fixture_lines(r[0], range(20), 1)]
+    raw = spark.createDataFrame([(l,) for l in lines], "value string")
+    dim.run_dim_pipeline(spark, raw, fixtures.TABLE_PROCESS_DIM_ROWS, store)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sources = [r[0] for r in fixtures.TABLE_PROCESS_DIM_ROWS]
+    try:
+        for n in (1, 3, 4):
+            lines = [l for src in sources[:n] for l in _fixture_lines(src, [5, 40 + n], 2 + n)]
+            raw = spark.createDataFrame([(l,) for l in lines], "value string")
+            sc.setJobGroup(f"dim-merge-{n}", f"merge a batch touching {n} tables")
+            merged = dim.run_dim_pipeline(spark, raw, fixtures.TABLE_PROCESS_DIM_ROWS, store)
+            sc.setJobGroup("dim-after", "checks")
+            assert len(merged) == n
+            assert len(tracker.getJobIdsForGroup(f"dim-merge-{n}")) <= 2, n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert dim.dim_snapshot(spark, store, "dim_sku_info", ["sku_name"]).count() == 23
+
+
+STAGED = [("1", "a2", 150), ("2", "b", 100), ("3", "c", 100)]  # B1, merged
 
 
 def test_merge_over_table_without_pointer(spark, tmp_path):
     """A table staged as a plain parquet directory (an initial load, or a
     store written before the pointer existed) is merged last-write-wins,
     and later reads see the committed version."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     store = str(tmp_path / "store")
     path = os.path.join(store, T)
-    os.makedirs(path)
-    staged = [("1", "a2", 150), ("2", "b", 100), ("3", "c", 100)]  # B1, merged
-    pq.write_table(
-        pa.table({"row_key": [k for k, _, _ in staged],
-                  "data": pa.array([[("id", k), ("tm_name", n)] for k, n, _ in staged],
-                                   pa.map_(pa.string(), pa.string())),
-                  "ts": pa.array([ts for _, _, ts in staged], pa.int64())}),
-        os.path.join(path, "part-00000.parquet"),
-    )
+    _stage(path, STAGED)
     assert _names(spark, store) == _lww(B1)
     merged = dim.merge_dim_batch(spark, _changes(spark, B2), store)[T]
     expected = _lww(B1, B2)
@@ -130,10 +166,11 @@ def test_merge_over_table_without_pointer(spark, tmp_path):
 
 
 def _crash_writes_into(monkeypatch, table_dir):
-    """Make every parquet write into ``table_dir`` fail while its tasks
-    run (each row raises), leaving what a failed Spark write leaves. The
-    failing write keeps the caller's save mode, so an overwrite still
-    deletes its target first."""
+    """Make every parquet write into ``table_dir`` fail. A Spark write
+    fails while its tasks run (each row raises), leaving what a failed
+    Spark write leaves; the failing write keeps the caller's save mode,
+    so an overwrite still deletes its target first. A pyarrow write
+    leaves a truncated part file, then raises."""
     real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
 
     def mode(self, save_mode):
@@ -148,8 +185,18 @@ def _crash_writes_into(monkeypatch, table_dir):
         failing = failing.mode(getattr(self, "save_mode", "errorifexists"))
         return real_parquet(failing, path, *args, **kwargs)
 
+    real_write_table = pq.write_table
+
+    def write_table(table, where, *args, **kwargs):
+        if os.path.commonpath([str(where), table_dir]) != table_dir:
+            return real_write_table(table, where, *args, **kwargs)
+        with open(where, "wb") as f:
+            f.write(b"PAR1\0")
+        raise OSError("injected crash")
+
     monkeypatch.setattr(DataFrameWriter, "mode", mode)
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(pq, "write_table", write_table)
 
 
 def _crash_commit(monkeypatch, table_dir):
@@ -210,3 +257,101 @@ def test_as_of_after_last_change_equals_snapshot(spark, tmp_path):
     last = max(ts for *_, ts in B1 + B2)
     as_of = {r["row_key"]: r["data"]["tm_name"] for r in dim.dim_as_of(spark, store, T, last).collect()}
     assert as_of == _names(spark, store) == _lww(B1, B2)
+
+
+def test_versions_are_not_hidden_and_older_names_continue(spark, tmp_path):
+    """Versions are named so Spark's file index does not treat them as
+    hidden; a store committed under the older ``_v<N>`` name reads as
+    before, and its next merge commits a version numbered past it."""
+    store = str(tmp_path / "store")
+    _apply(spark, store, "merge_dim_batch", B1)
+    live = os.path.basename(dim._live(os.path.join(store, T)))
+    assert not live.startswith(("_", "."))
+
+    old = str(tmp_path / "old")
+    path = os.path.join(old, T)
+    _stage(os.path.join(path, "_v3"), STAGED)
+    with open(os.path.join(path, "_CURRENT"), "w") as f:
+        f.write("_v3")
+    assert _names(spark, old) == _lww(B1)
+    dim.merge_dim_batch(spark, _changes(spark, B2), old)
+    assert os.path.basename(dim._live(path)) == "v4"
+    assert sorted(os.listdir(path)) == ["_CURRENT", "v4"]
+    assert _names(spark, old) == _lww(B1, B2)
+
+
+@pytest.mark.parametrize("staged", [False, True], ids=["new", "staged"])
+def test_crash_in_first_merge_keeps_staged_rows(spark, tmp_path, staged):
+    """A first merge that dies while writing leaves a table without a
+    pointer and a partial version inside it: readers see only the
+    staged rows (none for a new table), and the next merge succeeds."""
+    store = str(tmp_path / "store")
+    path = os.path.join(store, T)
+    before = [tuple(r) for r in (STAGED if staged else [])]
+    if staged:
+        _stage(path, STAGED)
+    with pytest.MonkeyPatch.context() as m:
+        _crash_writes_into(m, path)
+        with pytest.raises(Exception, match="injected crash"):
+            _apply(spark, store, "merge_dim_batch", B2)
+    assert "v1" in os.listdir(path) and "_CURRENT" not in os.listdir(path)
+    assert _names(spark, store) == {k: n for k, n, _ in before}
+
+    _apply(spark, store, "merge_dim_batch", B2)
+    assert _names(spark, store) == _lww([(k, n, "U", ts) for k, n, ts in before], B2)
+
+
+def _random_batches(rng, n):
+    """``n`` batches of (row_key, tm_name, op, ts). Shared keys get
+    upserts at ts drawn from a few values, so equal ts recur across
+    batches; each batch also owns keys that get an upsert and a delete,
+    at equal ts or either order. A row's name is a function of its
+    (key, ts, op), so equal changes are equal rows. Deletes stay on
+    owned keys: the snapshot keeps no tombstone, so an older upsert
+    arriving after a delete of its key would bring it back."""
+    batches = []
+    for b in range(n):
+        rows = [(k, f"{k}@{ts}", "U", ts) for k in rng.sample("abcdef", 4)
+                for ts in [rng.choice((100, 200, 300))]]
+        for i in range(3):
+            key, t_u, t_d = f"{b}.{i}", rng.choice((100, 200)), rng.choice((100, 200))
+            rows += [(key, f"{key}@{t_u}", "U", t_u), (key, None, "D", t_d)]
+        rng.shuffle(rows)
+        batches.append(rows)
+    return batches
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_held_snapshot_follows_the_rule(spark, tmp_path, seed):
+    """Seeded batches with equal-ts upsert/delete ties, applied in
+    reverse order with replays: after each batch the snapshot merged on
+    the driver equals the plain-Python last write, and after the last
+    one it equals ``dim_as_of`` over the SCD2 history of the same
+    batches."""
+    rng = random.Random(seed)
+    batches = _random_batches(rng, 4)
+    order = batches[::-1]
+    order.insert(rng.randrange(1, len(order) + 1), rng.choice(order))
+    store = str(tmp_path / "store")
+    for i, rows in enumerate(order):
+        merged = _apply(spark, store, "merge_dim_batch", rows)
+        _apply(spark, store, "scd2_merge", rows)
+        expected = _lww(*order[:i + 1])
+        assert {r["row_key"]: r["data"]["tm_name"] for r in merged.collect()} == expected
+    last = max(ts for rows in batches for *_, ts in rows)
+    as_of = {r["row_key"]: r["data"]["tm_name"] for r in dim.dim_as_of(spark, store, T, last).collect()}
+    assert as_of == _names(spark, store) == _lww(*batches)
+
+
+def test_merge_reads_a_version_committed_behind_its_back(spark, tmp_path):
+    """A version another writer commits through the same publish path
+    replaces the driver's held copy: the next merge starts from it."""
+    store = str(tmp_path / "store")
+    _apply(spark, store, "merge_dim_batch", B1)
+    other = [("2", "x", 120), ("7", "y", 120)]
+    dim._publish(os.path.join(store, T), lambda d: _stage(d, other))
+    merged = _apply(spark, store, "merge_dim_batch", B2)
+    expected = _lww([(k, n, "U", ts) for k, n, ts in other], B2)
+    assert expected != _lww(B1, B2)
+    assert {r["row_key"]: r["data"]["tm_name"] for r in merged.collect()} == expected
+    assert _names(spark, store) == expected

@@ -16,6 +16,11 @@ settings. Export the parent beside the working tree first:
 prints, for every per-layer metric the result JSON holds, the same
 medians, quartiles and pairs won (no bound applies to those).
 
+Either way it also prints, per streaming query kind of the workload
+(``main`` the trade stream, ``dws`` and ``uv`` the log streams), each
+run's median busy ms per measured micro-batch, taken from the record's
+``notes`` timeline, compared the same way: it shows which stream moved.
+
 A gain is claimed (``claim: yes``) only when the change wins at least
 nine tenths of the pairs and the medians differ by more than the
 parent's interquartile range. Run it on a quiet host: runs of identical
@@ -52,6 +57,17 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4)
     return q1, q2, q3
+
+
+def busy_ms(record: dict) -> dict[str, float]:
+    """Median busy ms per measured micro-batch for each query kind in a
+    record's ``notes`` timeline ((kind, batch id, input rows, start,
+    busy ms) lists; error strings are skipped)."""
+    per_kind: dict[str, list[float]] = {}
+    for note in record.get("notes", []):
+        if isinstance(note, list) and note[4] is not None:
+            per_kind.setdefault(note[0], []).append(note[4])
+    return {kind: statistics.median(ms) for kind, ms in per_kind.items()}
 
 
 def summarize(spec: dict, base: list[float], head: list[float]) -> str:
@@ -95,6 +111,7 @@ def main(argv=None) -> int:
     specs = bench["per_layer" if args.trace else "end_to_end"]
     values = {"base": {s["name"]: [] for s in specs}, "head": {s["name"]: [] for s in specs}}
     failed = {"base": [0, 0], "head": [0, 0]}
+    busy = {"base": [], "head": []}
     for i in range(args.pairs):
         order = ("base", "head") if i % 2 == 0 else ("head", "base")
         for side in order:
@@ -105,6 +122,7 @@ def main(argv=None) -> int:
             got = {n: m["value"] for n, m in res["metrics"].items()}
             for s in specs:
                 values[side][s["name"]].append(got.get(s["name"]))
+            busy[side].append(busy_ms(record))
             named = record["named"]
             print(f"pair {i} {side} correct={res['correct']} "
                   + " ".join(f"{n}={v}" for n, v in got.items())
@@ -116,6 +134,9 @@ def main(argv=None) -> int:
         print(f"{'parent' if side == 'base' else 'change'} fail_ratio {f / max(a, 1):.4g} ({f}/{a})")
     for s in specs:
         print(summarize(s, values["base"][s["name"]], values["head"][s["name"]]))
+    for kind in sorted({k for side in busy.values() for run in side for k in run}):
+        spec = {"name": f"busy_ms.{kind}", "unit": "ms", "better": "lower"}
+        print(summarize(spec, *([run.get(kind) for run in busy[side]] for side in ("base", "head"))))
     return 0
 
 
