@@ -118,15 +118,10 @@ TABLE_PROCESS_DIM = StructType(
     ]
 )
 
-#: One DIM store table (gmall/dim.py): the live row per row_key, its
-#: `data` pruned to the config's sink_columns, `ts` of the last change.
-DIM_SNAPSHOT = StructType(
-    [StructField("row_key", S), StructField("data", MapType(S, S)), StructField("ts", L)]
-)
-
-#: One SCD2 DIM history table: the change rows themselves, one per
-#: (row_key, ts, op), op "U" (upsert) or "D" (delete); versions are
-#: derived on read (gmall/dim.py::scd2_merge).
+#: The one DIM store layout (gmall/dim.py): change rows, `data` pruned
+#: to the config's sink_columns, op "U" (upsert) or "D" (delete). The
+#: snapshot keeps one per row_key (a delete as a tombstone), the SCD2
+#: history one per (row_key, ts, op).
 DIM_CHANGE = StructType(
     [
         StructField("row_key", S),

@@ -1711,12 +1711,16 @@ def foreach_batch_pipeline(
 ):
     """K4-K9 harness — ``readStream → transform → foreachBatch(writer)``
     with checkpointing: the engine's equivalent of each reference app's
-    main() (BaseApp.java:33-68; exactly-once via checkpoint + idempotent
-    writer replaces Flink's 2PC, FlinkSinkUtil.java:34-39).
-    ``writer(batch_df, batch_id)`` is any sinks.* batch writer. A
-    caller-supplied ``checkpoint`` is durable (exactly-once across
-    restarts); the default is a throwaway for bounded runs/tests and
-    is removed at process exit.
+    main() (BaseApp.java:33-68). ``writer(batch_df, batch_id)`` is any
+    sinks.* batch writer. A caller-supplied ``checkpoint`` is durable:
+    a restart resumes after the last committed batch, and re-runs a
+    batch that had not committed. That gives at-least-once delivery,
+    not exactly-once: neither ``sinks.jdbc.parquet_batch_writer`` nor
+    ``jdbc_batch_writer`` reads ``batch_id``, so a re-run batch appends
+    its rows twice (Flink's 2PC, FlinkSinkUtil.java:34-39, has no
+    equivalent yet; ROADMAP item 4). The DIM merge converges under
+    replay. The default checkpoint is a throwaway for bounded
+    runs/tests and is removed at process exit.
     """
     ckpt = checkpoint or _process_tempdir("ckpt_")
 

@@ -1,7 +1,8 @@
 """The DIM store's publish path: each merge writes its snapshot once and
 commits it with a pointer swap, reads declare the schema, a replayed
-batch converges, a crash mid-merge leaves the previous snapshot, and
-the snapshot held on the driver follows the committed version."""
+batch converges, a delete is kept as a tombstone, a crash mid-merge
+leaves the previous snapshot, and the snapshot held on the driver
+follows the committed version."""
 
 from __future__ import annotations
 
@@ -12,10 +13,9 @@ import random
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql.readwriter import DataFrameWriter
 
 from gmall_realtime_ck_spark.gmall import dim, fixtures
+from gmall_realtime_ck_spark.schemas import DIM_CHANGE
 
 T = "dim_base_trademark"
 CHANGES = "sink_table string, row_key string, data map<string,string>, op string, ts bigint"
@@ -50,7 +50,8 @@ def _names(spark, store):
 
 def _stage(directory, rows):
     """Write ``rows`` ((row_key, tm_name, ts)) as one parquet file in the
-    snapshot layout, as an initial load (or an older writer) would."""
+    3-column (row_key, data, ts) layout, as an initial load (or an older
+    writer) would."""
     os.makedirs(directory)
     pq.write_table(
         pa.table({"row_key": [k for k, _, _ in rows],
@@ -157,34 +158,19 @@ def test_merge_over_table_without_pointer(spark, tmp_path):
     store = str(tmp_path / "store")
     path = os.path.join(store, T)
     _stage(path, STAGED)
+    assert {r["op"] for r in dim._log(spark, path).collect()} == {"U"}  # no op column: upserts
     assert _names(spark, store) == _lww(B1)
     merged = dim.merge_dim_batch(spark, _changes(spark, B2), store)[T]
     expected = _lww(B1, B2)
     assert {r["row_key"]: r["data"]["tm_name"] for r in merged.collect()} == expected
     assert _names(spark, store) == expected
     assert "part-00000.parquet" not in os.listdir(path)
+    assert spark.read.parquet(dim._live(path)).schema == DIM_CHANGE
 
 
 def _crash_writes_into(monkeypatch, table_dir):
-    """Make every parquet write into ``table_dir`` fail. A Spark write
-    fails while its tasks run (each row raises), leaving what a failed
-    Spark write leaves; the failing write keeps the caller's save mode,
-    so an overwrite still deletes its target first. A pyarrow write
-    leaves a truncated part file, then raises."""
-    real_mode, real_parquet = DataFrameWriter.mode, DataFrameWriter.parquet
-
-    def mode(self, save_mode):
-        self.save_mode = save_mode
-        return real_mode(self, save_mode)
-
-    def parquet(self, path, *args, **kwargs):
-        if os.path.commonpath([path, table_dir]) != table_dir:
-            return real_parquet(self, path, *args, **kwargs)
-        boom = F.when(F.col("row_key").isNotNull(), F.raise_error(F.lit("injected crash")))
-        failing = self._df.withColumn("row_key", boom.otherwise(F.col("row_key"))).write
-        failing = failing.mode(getattr(self, "save_mode", "errorifexists"))
-        return real_parquet(failing, path, *args, **kwargs)
-
+    """Make every parquet write into ``table_dir`` (all DIM writes go
+    through pyarrow) leave a truncated part file, then raise."""
     real_write_table = pq.write_table
 
     def write_table(table, where, *args, **kwargs):
@@ -194,8 +180,6 @@ def _crash_writes_into(monkeypatch, table_dir):
             f.write(b"PAR1\0")
         raise OSError("injected crash")
 
-    monkeypatch.setattr(DataFrameWriter, "mode", mode)
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
     monkeypatch.setattr(pq, "write_table", write_table)
 
 
@@ -244,6 +228,19 @@ def test_crash_in_merge_keeps_previous_snapshot(spark, tmp_path, merge, inject):
 
     _apply(spark, store, merge, B2)
     assert _read(spark, store, merge) == _model(merge, B1, B2)
+
+
+def test_older_upsert_after_a_delete_stays_deleted(spark, tmp_path):
+    """A delete is kept as a tombstone: an upsert older than it, replayed
+    after it, does not bring the key back, in the snapshot as in the
+    SCD2 history."""
+    store = str(tmp_path / "store")
+    for rows in ([("1", "a", "U", 100)], [("1", None, "D", 350)], [("1", "a", "U", 100)]):
+        merged = _apply(spark, store, "merge_dim_batch", rows)
+        _apply(spark, store, "scd2_merge", rows)
+    as_of = {r["row_key"]: r["data"]["tm_name"] for r in dim.dim_as_of(spark, store, T, 400).collect()}
+    assert merged.collect() == []
+    assert _names(spark, store) == as_of == {}
 
 
 def test_as_of_after_last_change_equals_snapshot(spark, tmp_path):
@@ -303,16 +300,15 @@ def test_crash_in_first_merge_keeps_staged_rows(spark, tmp_path, staged):
 
 def _random_batches(rng, n):
     """``n`` batches of (row_key, tm_name, op, ts). Shared keys get
-    upserts at ts drawn from a few values, so equal ts recur across
-    batches; each batch also owns keys that get an upsert and a delete,
-    at equal ts or either order. A row's name is a function of its
-    (key, ts, op), so equal changes are equal rows. Deletes stay on
-    owned keys: the snapshot keeps no tombstone, so an older upsert
-    arriving after a delete of its key would bring it back."""
+    upserts and deletes at ts drawn from a few values, so equal ts recur
+    across batches and an older upsert can arrive after a delete of its
+    key; each batch also owns keys that get an upsert and a delete, at
+    equal ts or either order. A row's name is a function of its
+    (key, ts, op), so equal changes are equal rows."""
     batches = []
     for b in range(n):
-        rows = [(k, f"{k}@{ts}", "U", ts) for k in rng.sample("abcdef", 4)
-                for ts in [rng.choice((100, 200, 300))]]
+        rows = [(k, None if op == "D" else f"{k}@{ts}", op, ts) for k in rng.sample("abcdef", 4)
+                for ts, op in [(rng.choice((100, 200, 300)), rng.choice("UUD"))]]
         for i in range(3):
             key, t_u, t_d = f"{b}.{i}", rng.choice((100, 200)), rng.choice((100, 200))
             rows += [(key, f"{key}@{t_u}", "U", t_u), (key, None, "D", t_d)]
@@ -349,7 +345,8 @@ def test_merge_reads_a_version_committed_behind_its_back(spark, tmp_path):
     store = str(tmp_path / "store")
     _apply(spark, store, "merge_dim_batch", B1)
     other = [("2", "x", 120), ("7", "y", 120)]
-    dim._publish(os.path.join(store, T), lambda d: _stage(d, other))
+    dim._publish(os.path.join(store, T),
+                 [(k, {"id": k, "tm_name": n}, "U", ts) for k, n, ts in other])
     merged = _apply(spark, store, "merge_dim_batch", B2)
     expected = _lww([(k, n, "U", ts) for k, n, ts in other], B2)
     assert expected != _lww(B1, B2)

@@ -237,7 +237,7 @@ def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
     import json
     import os
 
-    from gmall_realtime_ck_spark.schemas import DIM_SNAPSHOT
+    from gmall_realtime_ck_spark.schemas import DIM_CHANGE
 
     def sku_lines(ids, ts):
         return [
@@ -258,7 +258,7 @@ def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
 
     with pytest.raises(Exception):
         merge(sku_lines([100], 2))
-    kept = (spark.read.schema(DIM_SNAPSHOT).option("ignoreCorruptFiles", "true")
+    kept = (spark.read.schema(DIM_CHANGE).option("ignoreCorruptFiles", "true")
             .parquet(dim._live(os.path.join(store, "dim_sku_info"))))
     assert kept.count() == 100
 
