@@ -49,15 +49,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None, register: bool = True
-) -> dict[str, DataFrame]:
-    """Load tables and (by default) register them as temp views so both
-    the DataFrame API and ``spark.sql`` can address them by name."""
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load every table and register each as a temp view so both the
+    DataFrame API and ``spark.sql`` can address them by name."""
     out: dict[str, DataFrame] = {}
-    for name in names or TABLES:
+    for name in TABLES:
         df = load_table(spark, sf_dir, name)
-        if register:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
     return out

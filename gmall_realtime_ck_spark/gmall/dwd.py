@@ -31,15 +31,15 @@ def cst_datetime(col) -> F.Column:
 # ---------------------------------------------------------------------------
 
 
-def parse_topic_db(raw: DataFrame, value_col: str = "value") -> DataFrame:
+def parse_topic_db(raw: DataFrame) -> DataFrame:
     """Maxwell envelope ETL (P2 — DIM/app/DimApp.java:212-237): parse
-    JSON, keep database='gmall' with a usable type and non-empty data;
-    add event-time ``et`` from epoch-seconds ts
-    (BaseSQLApp.java:61-63). Kafka tombstones (P9) drop at the
-    isNotNull gate.
+    the JSON in column ``value`` (FlinkSourceUtil.java:38-58), keep
+    database='gmall' with a usable type and non-empty data; add
+    event-time ``et`` from epoch-seconds ts (BaseSQLApp.java:61-63).
+    Kafka tombstones (P9) drop at the isNotNull gate.
     """
-    parsed = raw.filter(F.col(value_col).isNotNull()).select(
-        F.from_json(F.col(value_col), MAXWELL_ENVELOPE).alias("e")
+    parsed = raw.filter(F.col("value").isNotNull()).select(
+        F.from_json(F.col("value"), MAXWELL_ENVELOPE).alias("e")
     )
     return (
         parsed.select("e.*")
@@ -57,14 +57,15 @@ def filter_bootstrap(db: DataFrame) -> DataFrame:
     return db.filter(~F.col("type").startswith("bootstrap-"))
 
 
-def split_log(raw: DataFrame, value_col: str = "value") -> dict[str, DataFrame]:
-    """P1/X1/K10 — the 5-way log split (DwdBaseLog.java:75-175,231-258):
-    unparseable lines → 'dirty'; err/start stripped off; displays[] and
-    actions[] exploded into per-element records enriched with
-    common+page+ts; page rows remain the main stream.
+def split_log(raw: DataFrame) -> dict[str, DataFrame]:
+    """P1/X1/K10 — the 5-way log split (DwdBaseLog.java:75-175,231-258)
+    of the JSON lines in column ``value``: unparseable lines → 'dirty';
+    err/start stripped off; displays[] and actions[] exploded into
+    per-element records enriched with common+page+ts; page rows remain
+    the main stream.
     """
     parsed = raw.select(
-        F.col(value_col).alias("raw"), F.from_json(F.col(value_col), LOG_EVENT).alias("e")
+        F.col("value").alias("raw"), F.from_json(F.col("value"), LOG_EVENT).alias("e")
     )
     dirty = parsed.filter(F.col("e").isNull() | F.col("e.ts").isNull()).select("raw")
     ok = parsed.filter(F.col("e").isNotNull() & F.col("e.ts").isNotNull()).select("e.*")

@@ -146,12 +146,13 @@ def home_detail_uv_window(page: DataFrame, size: str = "10 seconds") -> DataFram
     )
 
 
-def dws_user_register_window(reg: DataFrame, size: str = "5 seconds", ts_col: str = "et") -> DataFrame:
+def dws_user_register_window(reg: DataFrame, size: str = "5 seconds") -> DataFrame:
     """DwsUserUserRegisterWindow.java:40-84 (A3) — the register count
-    over a global tumbling window: windowAll(5 s).aggregate(count) with
-    a 5 s bounded-out-of-orderness watermark. ``cur_date`` derives from
-    the window END (tsToDateForPartition(ctx.window().getEnd()), :79 —
-    note: start for the other DWS beans).
+    over a global tumbling window on event time ``et``:
+    windowAll(5 s).aggregate(count) with a 5 s bounded-out-of-orderness
+    watermark. ``cur_date`` derives from the window END
+    (tsToDateForPartition(ctx.window().getEnd()), :79 — note: start for
+    the other DWS beans).
 
     Idleness mapping: the reference adds withIdleness(120 s) (:45) — a
     Flink per-source-partition device so one idle Kafka partition cannot
@@ -160,7 +161,7 @@ def dws_user_register_window(reg: DataFrame, size: str = "5 seconds", ts_col: st
     back progress and no idleness knob exists or is needed; only a fully
     idle SOURCE stalls, which Flink's idleness cannot fix either.
     """
-    w = F.window(ts_col, size)
+    w = F.window("et", size)
     return (
         reg.groupBy(w.alias("w"))
         .agg(F.count(F.lit(1)).alias("register_ct"))

@@ -6,8 +6,8 @@ ClickHouse 1000 rows / 200 ms (DwsTrafficSourceKeywordPageViewWindowCK
 .java:107-110), generic reflection-based writer skipping
 @TransientSink fields (ClickHouseUtil.java:22-62), Doris stream-load
 with 3×1 MB buffers (FlinkSinkUtil.java:69-94). In Spark a foreachBatch
-JDBC write is naturally batched; ``batchsize`` maps the reference's
-knobs, transient fields are dropped with a select.
+JDBC write is naturally batched (1000 rows per JDBC batch, as in the
+reference); transient fields are dropped with a select.
 """
 
 from __future__ import annotations
@@ -29,13 +29,13 @@ def jdbc_batch_writer(
     url: str,
     table: str,
     driver: str | None = None,
-    batchsize: int = 1000,
     transient_cols: tuple[str, ...] = (),
     properties: dict | None = None,
 ):
     """K6/K7 — a foreachBatch writer: drops @TransientSink-style columns
     (TransientSink.java:13-16; the reference's reflection filler skips
-    them at ClickHouseUtil.java:38-47), appends with JDBC batching.
+    them at ClickHouseUtil.java:38-47), appends with JDBC batches of
+    1000 rows unless ``properties`` sets ``batchsize``.
 
     Usage::
 
@@ -45,7 +45,7 @@ def jdbc_batch_writer(
         ).start()
     """
     props = dict(properties or {})
-    props.setdefault("batchsize", str(batchsize))
+    props.setdefault("batchsize", "1000")
     if driver:
         props.setdefault("driver", driver)
 

@@ -1,4 +1,6 @@
-"""Kafka sinks (SURVEY.md §2.2 K1-K3, K10).
+"""Kafka sinks (SURVEY.md §2.2 K1-K3). Each writes the frame's
+``value`` column; K10's dirty-line side output is ``gmall.dwd.split_log``'s
+'dirty' branch.
 
 K2's dynamic routing is native in Spark: the kafka sink reads a
 ``topic`` column per row, so the reference's custom
@@ -14,38 +16,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def to_kafka_fixed(df: DataFrame, topic: str, bootstrap_servers: str, value_col: str = "value"):
+def to_kafka_fixed(df: DataFrame, topic: str, bootstrap_servers: str):
     """K1 — fixed-topic append writer (FlinkSinkUtil.java:27-42)."""
     return (
-        df.select(F.col(value_col).cast("string").alias("value"))
+        df.select(F.col("value").cast("string").alias("value"))
         .writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
     )
 
 
-def to_kafka_dynamic(df: DataFrame, bootstrap_servers: str, topic_col: str = "topic",
-                     value_col: str = "value"):
+def to_kafka_dynamic(df: DataFrame, bootstrap_servers: str):
     """K2 — per-row topic routing (FlinkSinkUtil.java:46-67): the sink
     consumes the ``topic`` column produced by gmall.dwd.dynamic_split."""
     return (
-        df.select(
-            F.col(topic_col).alias("topic"), F.col(value_col).cast("string").alias("value")
-        )
+        df.select(F.col("topic"), F.col("value").cast("string").alias("value"))
         .writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
     )
 
 
-def to_kafka_upsert(df: DataFrame, topic: str, bootstrap_servers: str, key_col: str,
-                    value_col: str = "value"):
+def to_kafka_upsert(df: DataFrame, topic: str, bootstrap_servers: str, key_col: str):
     """K3 — keyed write (upsert-kafka analogue, SQLUtil.java:38-46):
     key column set so compacted topics converge to the latest value; a
     null ``value`` is an explicit tombstone."""
     return (
         df.select(
             F.col(key_col).cast("string").alias("key"),
-            F.col(value_col).cast("string").alias("value"),
+            F.col("value").cast("string").alias("value"),
         )
         .writeStream.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap_servers)
@@ -53,11 +51,8 @@ def to_kafka_upsert(df: DataFrame, topic: str, bootstrap_servers: str, key_col: 
     )
 
 
-def write_file_topic_segment(
-    df: DataFrame, topic_dir: str, segment: int, key_col: str = "key",
-    value_col: str = "value",
-) -> None:
-    """K3 twin without a broker: append one 'log segment' of keyed
+def write_file_topic_segment(df: DataFrame, topic_dir: str, segment: int) -> None:
+    """K3 twin without a broker: append one 'log segment' of the keyed
     (key, value) records — value NULL = explicit tombstone — to a
     parquet-backed topic directory. The segment number is the offset
     surrogate (monotone per producer, exactly Kafka's per-partition
@@ -72,18 +67,11 @@ def write_file_topic_segment(
     """
     (
         df.select(
-            F.col(key_col).cast("string").alias("key"),
-            F.col(value_col).cast("string").alias("value"),
+            F.col("key").cast("string").alias("key"),
+            F.col("value").cast("string").alias("value"),
             F.lit(int(segment)).cast("bigint").alias("segment"),
         )
         .write.mode("append")
         .parquet(topic_dir)
     )
 
-
-def split_dirty(parsed: DataFrame, raw_col: str = "raw", parsed_col: str = "e"):
-    """K10 — dirty-data side output (DwdBaseLog.java:231-258): returns
-    (clean, dirty); dirty keeps the raw line for the dirty_data topic."""
-    dirty = parsed.filter(F.col(parsed_col).isNull()).select(F.col(raw_col).alias("value"))
-    clean = parsed.filter(F.col(parsed_col).isNotNull())
-    return clean, dirty

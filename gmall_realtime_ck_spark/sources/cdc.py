@@ -19,13 +19,13 @@ from pyspark.sql import functions as F
 from ..schemas import DEBEZIUM_ENVELOPE
 
 
-def parse_debezium(raw: DataFrame, value_col: str = "value") -> DataFrame:
-    """Debezium envelope → (op, before, after, ts_ms) rows. op ∈
-    {r,c,u,d} (Test01_FlinkCDC.java:39-43): r/c/u carry ``after``,
-    d carries ``before``."""
+def parse_debezium(raw: DataFrame) -> DataFrame:
+    """Debezium envelope in column ``value`` → (op, before, after,
+    ts_ms) rows. op ∈ {r,c,u,d} (Test01_FlinkCDC.java:39-43): r/c/u
+    carry ``after``, d carries ``before``."""
     return (
-        raw.filter(F.col(value_col).isNotNull())
-        .select(F.from_json(F.col(value_col), DEBEZIUM_ENVELOPE).alias("e"))
+        raw.filter(F.col("value").isNotNull())
+        .select(F.from_json(F.col("value"), DEBEZIUM_ENVELOPE).alias("e"))
         .select("e.*")
         .filter(F.col("op").isin("r", "c", "u", "d"))
     )

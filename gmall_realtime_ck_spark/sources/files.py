@@ -36,24 +36,19 @@ def parquet_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.readStream.schema(schema).format("parquet").load(path)
 
 
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """Batch CSV reader with an EXPLICIT schema — inference double-scans
-    the input (a full extra pass over 100 TB) and guesses types per
-    file, so it is deliberately not offered. Malformed rows are kept
-    and flagged (PERMISSIVE + corrupt-record column) — the same
-    dirty-data-to-the-side posture as the reference's dirty topic
-    (BaseDbTableProcessFunction's dirty stream, SURVEY §2.3 P1/K10).
+def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """Batch CSV reader (header line, comma-separated) with an EXPLICIT
+    schema — inference double-scans the input (a full extra pass over
+    100 TB) and guesses types per file, so it is deliberately not
+    offered. Malformed rows are kept and flagged (PERMISSIVE +
+    corrupt-record column) — the same dirty-data-to-the-side posture as
+    the reference's dirty topic (BaseDbTableProcessFunction's dirty
+    stream, SURVEY §2.3 P1/K10).
     """
     return (
         spark.read.schema(schema + ", _corrupt string")
-        .option("header", str(header).lower())
-        .option("sep", delimiter)
+        .option("header", "true")
+        .option("sep", ",")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt")
         .csv(path)

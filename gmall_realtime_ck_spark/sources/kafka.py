@@ -51,30 +51,26 @@ def read_kafka_json_table(
     topic: str,
     bootstrap_servers: str,
     schema: StructType,
-    watermark_delay: str = "3 seconds",
-    ts_col: str = "ts",
-    ts_unit: str = "seconds",
 ) -> DataFrame:
     """S2 — declarative JSON table over a topic with event time +
     watermark, the ``readOdsDb`` pattern (SQLUtil.java:12-22,
-    BaseSQLApp.java:53-65): parse, add ``et`` from the epoch column
-    (seconds for topic_db, millis for topic_log), watermark 3 s.
+    BaseSQLApp.java:53-65): parse, add ``et`` from the epoch-second
+    ``ts`` column, watermark 3 s.
     """
     raw = read_kafka_stream(spark, topic, bootstrap_servers)
-    to_ts = F.timestamp_seconds if ts_unit == "seconds" else F.timestamp_millis
     return (
         raw.filter(F.col("value").isNotNull())
         .select(F.from_json("value", schema).alias("e"))
         .select("e.*")
-        .withColumn("et", to_ts(F.col(ts_col)))
-        .withWatermark("et", watermark_delay)
+        .withColumn("et", F.timestamp_seconds(F.col("ts")))
+        .withWatermark("et", "3 seconds")
     )
 
 
-def filter_tombstones(df: DataFrame, value_col: str = "value") -> DataFrame:
-    """P9 — drop upsert-kafka retraction tombstones before parsing
-    (DwsTradeSkuOrderWindow.java:138-147)."""
-    return df.filter(F.col(value_col).isNotNull())
+def filter_tombstones(df: DataFrame) -> DataFrame:
+    """P9 — drop upsert-kafka retraction tombstones (a NULL ``value``)
+    before parsing (DwsTradeSkuOrderWindow.java:138-147)."""
+    return df.filter(F.col("value").isNotNull())
 
 
 def read_file_topic_stream(spark: SparkSession, topic_dir: str) -> DataFrame:
@@ -94,19 +90,18 @@ def read_file_topic(spark: SparkSession, topic_dir: str) -> DataFrame:
     return spark.read.schema("key string, value string, segment bigint").parquet(topic_dir)
 
 
-def upsert_snapshot(df: DataFrame, key_col: str = "key", value_col: str = "value",
-                    order_col: str = "segment") -> DataFrame:
-    """Materialize the upsert-kafka TABLE view of a keyed log: the
-    latest record per key wins, and a key whose latest record is a
-    tombstone is deleted — exactly what Flink's upsert-kafka source
-    reconstructs via retractions and what a compacted topic converges
-    to (SQLUtil.java:38-46; SURVEY §7 H1 maps retractions to
-    latest-wins). One keyed aggregation: max_by(value, offset) — no
+def upsert_snapshot(df: DataFrame) -> DataFrame:
+    """Materialize the upsert-kafka TABLE view of a keyed (``key``,
+    ``value``) log ordered by ``segment``: the latest record per key
+    wins, and a key whose latest record is a tombstone is deleted —
+    exactly what Flink's upsert-kafka source reconstructs via
+    retractions and what a compacted topic converges to
+    (SQLUtil.java:38-46; SURVEY §7 H1 maps retractions to latest-wins). One keyed aggregation: max_by(value, offset) — no
     window, no sort.
     """
-    latest = df.groupBy(key_col).agg(
-        F.max_by(F.struct(F.col(value_col).alias("v")), F.col(order_col)).alias("s")
+    latest = df.groupBy("key").agg(
+        F.max_by(F.struct(F.col("value").alias("v")), F.col("segment")).alias("s")
     )
-    return latest.select(F.col(key_col), F.col("s.v").alias(value_col)).filter(
-        F.col(value_col).isNotNull()
+    return latest.select(F.col("key"), F.col("s.v").alias("value")).filter(
+        F.col("value").isNotNull()
     )

@@ -41,19 +41,18 @@ def backfill_then_stream(
     sf_dir: str,
     transform: Callable[[DataFrame], DataFrame],
     cutoff: str,
-    output_mode: str = "complete",
 ) -> DataFrame:
     """Run ``transform`` as a batch over events strictly BEFORE
     ``cutoff`` (a ``'YYYY-MM-DD HH:MM:SS'`` literal aligned to the
     transform's window geometry) and as a bounded stream over events
-    AT/after it, returning the union — row-identical to one batch pass
-    over everything when the cutoff straddles no group.
+    AT/after it (complete mode), returning the union — row-identical to
+    one batch pass over everything when the cutoff straddles no group.
     """
     cut = F.to_timestamp(F.lit(cutoff))
     batch_events = load_table(spark, sf_dir, "events")
     batch_leg = transform(batch_events.filter(F.col("ts") < cut))
     stream_leg = _run_to_memory(
         transform(events_file_stream(spark, sf_dir).filter(F.col("ts") >= cut)),
-        output_mode,
+        "complete",
     )
     return batch_leg.unionByName(stream_leg)

@@ -203,7 +203,8 @@ def _run_to_memory(
     slot for the same reason; the scoping keeps bounded runs cheap on
     sessions built elsewhere (a vanilla ``SparkSession.builder``
     session, ``tools/preflight.py``'s 32 partitions). The prior value is
-    restored afterwards so the caller's session is untouched.
+    restored as soon as the query has started (it runs on its own copy
+    of the conf), so the caller's session is untouched.
 
     No-data micro-batches are disabled by default for the run (r13):
     after the last data batch, AvailableNow otherwise appends an extra
@@ -250,14 +251,10 @@ def _run_many_to_memory(
     ``_run_to_memory`` (same trigger, confs, checkpoint hygiene);
     result tables return in input order.
 
-    Single-threaded assumption: ``noDataMicroBatches`` (and the
-    shuffle-partition scoping) are flipped SESSION-globally for the
-    run window and restored after — a streaming query started
-    concurrently elsewhere in the session would capture the disabled
-    flush batch, which (unlike the perf-only partition scoping) can
-    change that query's RESULTS. Bench/preflight/tests run bounded
-    queries sequentially from one thread, which is what keeps this
-    safe; a concurrent caller must serialize entry here."""
+    The scoped confs are session-wide only while the queries START: a
+    query copies the session conf when it starts, so they are restored
+    before the awaits, and a query started elsewhere in the session
+    during the run keeps the caller's values."""
     if not dfs_modes:
         raise ValueError("_run_many_to_memory: dfs_modes is empty")
     spark = dfs_modes[0][0].sparkSession
@@ -270,29 +267,31 @@ def _run_many_to_memory(
     )
     started: list[tuple] = []  # (query | None, name, ckpt)
     try:
-        for df, output_mode in dfs_modes:
-            name = "m" + uuid.uuid4().hex[:12]
-            # Under _TEMP_ROOT so a SIGKILL'd run (no atexit) still
-            # lands in the directory the entrypoint sweep reaps —
-            # mkdtemp in the shared system tempdir would strand orphans
-            # exactly where the sweep no longer looks (the r6 incident
-            # class; r8 advisor finding).
-            ckpt = _process_tempdir("ckpt_")
-            started.append((None, name, ckpt))
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            started[-1] = (q, name, ckpt)
+        try:
+            for df, output_mode in dfs_modes:
+                name = "m" + uuid.uuid4().hex[:12]
+                # Under _TEMP_ROOT so a SIGKILL'd run (no atexit) still
+                # lands in the directory the entrypoint sweep reaps —
+                # mkdtemp in the shared system tempdir would strand
+                # orphans exactly where the sweep no longer looks (the
+                # r6 incident class; r8 advisor finding).
+                ckpt = _process_tempdir("ckpt_")
+                started.append((None, name, ckpt))
+                q = (
+                    df.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode(output_mode)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                started[-1] = (q, name, ckpt)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+            spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
         for q, _, _ in started:
             q.awaitTermination()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
         # The memory sink holds results driver-side; the checkpoint is
         # only needed while the bounded query runs. Without this, every
         # bench/test invocation leaks a ckpt_* dir in /tmp (same leak
@@ -393,17 +392,17 @@ def flow_dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(out, "append")
 
 
-def keyword_pipeline_stream(spark: SparkSession, log_dir: str, size: str = "10 seconds") -> DataFrame:
+def keyword_pipeline_stream(spark: SparkSession, log_dir: str) -> DataFrame:
     """The reference's flagship SQL app as a stream
     (DwsTrafficSourceKeywordPageViewWindow.java:36-99): topic_log text
     stream → 5-way split's page branch → search filter → tokenize →
-    tumbling count. Bounded run, complete mode.
+    1-hour tumbling count. Bounded run, complete mode.
     """
     from ..gmall.dwd import split_log
     from ..gmall.dws import keyword_window
 
     page = split_log(text_stream(spark, log_dir))["page"]
-    return _run_to_memory(keyword_window(page, size=size), "complete")
+    return _run_to_memory(keyword_window(page, size="1 hour"), "complete")
 
 
 def flow_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1373,7 +1372,7 @@ def flow_keyword_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # run, so the staged topic files can be deleted immediately —
         # at sf0.1+ they are tens of MB per invocation and bench/tests
         # call this repeatedly
-        return keyword_pipeline_stream(spark, d, size="1 hour")
+        return keyword_pipeline_stream(spark, d)
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
@@ -1396,7 +1395,7 @@ def flow_user_register(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("ts", "5 seconds")
         .select(F.col("ts").alias("et"))
     )
-    return _run_to_memory(urw(ev, size="5 seconds", ts_col="et"), "complete")
+    return _run_to_memory(urw(ev, size="5 seconds"), "complete")
 
 
 def flow_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -133,23 +133,18 @@ _LOGIN_OUT = StructType(
 )
 
 
-def login_flags(logins: DataFrame, back_gap_days: int = 8,
-                ttl_ms: int | None = None) -> DataFrame:
+def login_flags(logins: DataFrame) -> DataFrame:
     """T6 streaming — unique + returning user flags
     (DwsUserUserLoginWindow.java:80-124): uu=1 on the first login of a
     new day; back=1 when the gap since the previous active date is
-    ≥ back_gap_days (:108-111). Input: user_id, cur_date (sorted dates
-    per key arrive in event order from the upstream watermark).
-    ``ttl_ms`` expires idle per-user state as in daily_uv_flags.
+    ≥ 8 days (:108-111). Input: user_id, cur_date (sorted dates per key
+    arrive in event order from the upstream watermark). Per-user state
+    has no TTL: the last active date is what ``back`` is measured from.
     """
     from datetime import date
 
     def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         (user_id,) = key
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=["user_id", "cur_date", "uu", "back"])
-            return
         last = state.get[0] if state.exists else None
         for pdf in pdf_iter:
             uu, back = [], []
@@ -161,7 +156,7 @@ def login_flags(logins: DataFrame, back_gap_days: int = 8,
                 elif d != last:
                     uu.append(1)
                     gap = (date.fromisoformat(d) - date.fromisoformat(last)).days
-                    back.append(1 if gap >= back_gap_days else 0)
+                    back.append(1 if gap >= 8 else 0)
                     if d > last:
                         last = d
                 else:
@@ -172,15 +167,9 @@ def login_flags(logins: DataFrame, back_gap_days: int = 8,
             )
         if last is not None:
             state.update((last,))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout if ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return logins.groupBy("user_id").applyInPandasWithState(
-        fn, _LOGIN_OUT, _LOGIN_STATE, "append", timeout
+        fn, _LOGIN_OUT, _LOGIN_STATE, "append", GroupStateTimeout.NoTimeout
     )
 
 
@@ -458,7 +447,7 @@ _KMV_OUT = StructType(
 )
 
 
-def kmv_sketch_stream(dh: DataFrame, k: int, grace_ms: int = 24 * 3600 * 1000) -> DataFrame:
+def kmv_sketch_stream(dh: DataFrame, k: int) -> DataFrame:
     """Bounded-state KMV distinct-count sketch, live (Bar-Yossef et al.
     2002): per event-day, state is exactly the running K-smallest set
     of distinct user hashes (≤ K longs) plus one saturation flag — the
@@ -481,7 +470,7 @@ def kmv_sketch_stream(dh: DataFrame, k: int, grace_ms: int = 24 * 3600 * 1000) -
 
     Input must carry a watermarked event-time column: state for a day
     is expired via EventTimeTimeout once the watermark passes day-end
-    + ``grace_ms`` — closed days cost nothing forever after, keeping
+    + a 1-day grace — closed days cost nothing forever after, keeping
     total state O(open days × K) longs.
     """
 
@@ -499,10 +488,9 @@ def kmv_sketch_stream(dh: DataFrame, k: int, grace_ms: int = 24 * 3600 * 1000) -
         for pdf in pdf_iter:
             cur, sat = _kmv_merge(cur, pdf["h"].to_numpy(dtype="int64"), k, sat)
         state.update((",".join(map(str, cur.tolist())), sat))
-        day_end_ms = (
-            int(pd.Timestamp(d).value // 1_000_000) + 24 * 3600 * 1000 + grace_ms
-        )
-        state.setTimeoutTimestamp(max(day_end_ms, state.getCurrentWatermarkMs() + 1))
+        # day end + the 1-day grace
+        expire_ms = int(pd.Timestamp(d).value // 1_000_000) + 2 * 24 * 3600 * 1000
+        state.setTimeoutTimestamp(max(expire_ms, state.getCurrentWatermarkMs() + 1))
         yield pd.DataFrame(
             {
                 "d": [d],

@@ -108,9 +108,7 @@ def test_kafka_upsert_tombstone_cycle_live(spark, tmp_path):
     )
     q.awaitTermination(120)
     log = spark.read.parquet(str(out))
-    snap = upsert_snapshot(
-        log.withColumn("segment", F.monotonically_increasing_id()), order_col="segment"
-    )
+    snap = upsert_snapshot(log.withColumn("segment", F.monotonically_increasing_id()))
     got = {r["key"]: r["value"] for r in snap.collect()}
     assert got == {"k1": '{"v": 2}'}  # k1 updated, k2 tombstoned away
 

@@ -34,60 +34,39 @@ def test_traffic_window_app_stream_equals_batch(spark, log_dir):
     )
     b = sorted(map(tuple, batch.collect()))
 
-    raw = spark.readStream.format("text").load(log_dir)
-    page = dwd.split_log(raw)["page"]
     # complete-mode streaming run of pv/sv/dur (uv needs keyed state →
-    # done via flow_daily_uv path); compare the stateless measures
-    et = F.timestamp_millis("ts")
-    w = F.window("et", "1 hour")
-    streamed = pipelines._run_to_memory(
-        page.select(
-            F.col("common.vc").alias("vc"),
-            F.col("common.ch").alias("ch"),
-            F.col("common.ar").alias("ar"),
-            F.col("common.is_new").alias("is_new"),
-            (F.col("page.last_page_id").isNull() | (F.col("page.last_page_id") == "")).cast("long").alias("sv"),
-            F.col("page.during_time").alias("during_time"),
-            et.alias("et"),
+    # done via flow_daily_uv path); compare the stateless measures,
+    # projected the same way on both sides
+    def measures(page):
+        return (
+            page.select(
+                F.col("common.vc").alias("vc"),
+                F.col("common.ch").alias("ch"),
+                F.col("common.ar").alias("ar"),
+                F.col("common.is_new").alias("is_new"),
+                (F.col("page.last_page_id").isNull() | (F.col("page.last_page_id") == ""))
+                .cast("long")
+                .alias("sv"),
+                F.col("page.during_time").alias("during_time"),
+                F.timestamp_millis("ts").alias("et"),
+            )
+            .groupBy(F.window("et", "1 hour").alias("w"), "vc", "ch", "ar", "is_new")
+            .agg(
+                F.count(F.lit(1)).alias("pv_ct"),
+                F.sum("sv").alias("sv_ct"),
+                F.sum("during_time").alias("dur_sum"),
+            )
         )
-        .groupBy(w.alias("w"), "vc", "ch", "ar", "is_new")
-        .agg(
-            F.count(F.lit(1)).alias("pv_ct"),
-            F.sum("sv").alias("sv_ct"),
-            F.sum("during_time").alias("dur_sum"),
-        ),
-        "complete",
-    )
-    s = {
-        (r["vc"], r["ch"], r["ar"], r["is_new"], r["w"]["start"], r["pv_ct"], r["sv_ct"], r["dur_sum"])
-        for r in streamed.collect()
-    }
-    b_cmp = {
-        # batch formats windows to strings; recompute the raw-window view
-        # for comparison via the same streaming-side aggregation in batch
-    }
-    batch_raw = (
-        dwd.split_log(spark.read.text(log_dir))["page"]
-        .select(
-            F.col("common.vc").alias("vc"),
-            F.col("common.ch").alias("ch"),
-            F.col("common.ar").alias("ar"),
-            F.col("common.is_new").alias("is_new"),
-            (F.col("page.last_page_id").isNull() | (F.col("page.last_page_id") == "")).cast("long").alias("sv"),
-            F.col("page.during_time").alias("during_time"),
-            F.timestamp_millis("ts").alias("et"),
-        )
-        .groupBy(F.window("et", "1 hour").alias("w"), "vc", "ch", "ar", "is_new")
-        .agg(
-            F.count(F.lit(1)).alias("pv_ct"),
-            F.sum("sv").alias("sv_ct"),
-            F.sum("during_time").alias("dur_sum"),
-        )
-    )
-    b2 = {
-        (r["vc"], r["ch"], r["ar"], r["is_new"], r["w"]["start"], r["pv_ct"], r["sv_ct"], r["dur_sum"])
-        for r in batch_raw.collect()
-    }
+
+    def rows(df):
+        return {
+            (r["vc"], r["ch"], r["ar"], r["is_new"], r["w"]["start"], r["pv_ct"], r["sv_ct"], r["dur_sum"])
+            for r in df.collect()
+        }
+
+    raw = spark.readStream.format("text").load(log_dir)
+    s = rows(pipelines._run_to_memory(measures(dwd.split_log(raw)["page"]), "complete"))
+    b2 = rows(measures(dwd.split_log(spark.read.text(log_dir))["page"]))
     assert s == b2
     assert len(b) > 0  # the full DWS shape also materializes
 

@@ -61,8 +61,7 @@ def test_jdbc_writer_drops_transient(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameWriter, "jdbc", fake_jdbc)
     writer = jdbc_batch_writer(
-        clickhouse_url("ckhost"), "dws_keyword", transient_cols=("ts", "order_id_set"),
-        batchsize=1000,
+        clickhouse_url("ckhost"), "dws_keyword", transient_cols=("ts", "order_id_set")
     )
     df = spark.createDataFrame(
         [("2024-01-01 00:00:00", "kw", 5, 123, "x")],

@@ -43,6 +43,41 @@ def test_run_many_to_memory_equals_sequential_runs(spark, tables):
     assert sorted(map(tuple, both[1].collect())) == sorted(map(tuple, seq_ev.collect()))
 
 
+def test_run_many_to_memory_restores_confs_before_awaiting(spark, monkeypatch):
+    """The scoped confs reach the queries, which copy the session conf
+    when they start, and are the caller's values again while the
+    queries run: a query started elsewhere in the session meanwhile
+    keeps the caller's shuffle partitions and flush batch."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    ev = pipelines.events_file_stream(spark, SF_DIR)
+    agg = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("ct"))
+    seen, progress = [], []
+    await_termination = StreamingQuery.awaitTermination
+
+    def recording_await(self, timeout=None):
+        seen.append(tuple(spark.conf.get(k) for k in keys))
+        out = await_termination(self, timeout)
+        progress.append(self.lastProgress)
+        return out
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", recording_await)
+    prev_sp = spark.conf.get(keys[0])
+    spark.conf.set(keys[0], "5")
+    try:
+        pipelines._run_many_to_memory([(agg, "complete"), (ev.select("event_id"), "append")])
+        caller = tuple(spark.conf.get(k) for k in keys)
+    finally:
+        spark.conf.set(keys[0], prev_sp)
+    assert caller[0] == "5"
+    assert seen == [caller, caller]
+    # the aggregation still ran on the scoped partitions, without a flush batch
+    ops = progress[0]["stateOperators"]
+    assert ops[0]["numShufflePartitions"] == pipelines._RUN_SHUFFLE_PARTITIONS
+    assert progress[0]["numInputRows"] > 0
+
+
 def test_stream_dedup_counts_match_batch(spark, tables):
     out = pipelines.flow_dedup_first(spark, SF_DIR)
     n_keys = tables["events"].select("user_id", "event_type").distinct().count()
@@ -121,7 +156,7 @@ def test_user_register_append_watermark_5s(spark, tables):
     # emission (the reference's fire-at-watermark-passage), which for
     # an un-sentineled append aggregate happens in the flush batch.
     result = pipelines._run_to_memory(
-        dws_user_register_window(ev, size="5 seconds", ts_col="et"),
+        dws_user_register_window(ev, size="5 seconds"),
         "append",
         no_data_batches=True,
     )
@@ -204,7 +239,7 @@ def test_keyword_pipeline_stream_equals_batch(spark, tmp_path):
         "overwrite"
     ).text(log_dir)
 
-    streamed = pipelines.keyword_pipeline_stream(spark, log_dir, size="1 hour")
+    streamed = pipelines.keyword_pipeline_stream(spark, log_dir)
     batch = dws.keyword_window(
         dwd.split_log(spark.read.text(log_dir))["page"], size="1 hour"
     )
