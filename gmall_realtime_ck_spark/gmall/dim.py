@@ -16,21 +16,18 @@ Store layout: both stores of a table are the change log, in the one
 layout ``schemas.DIM_CHANGE`` (row_key, data, op, ts), compacted by one
 driver-side merge (``_merge``) under different keys:
 ``<store>/<table>/`` per row_key (the snapshot: each key's last change),
-``<store>/<table>_scd2/`` per (row_key, ts, op) (the SCD2 history). A
-merge writes the whole new table once, with pyarrow, into a fresh
-version directory ``v<N>``, then commits it by writing the version's
-name to ``_CURRENT.tmp`` and ``os.replace``-ing that over ``_CURRENT``:
-the rename is the commit point. It then deletes every other entry of
-the table directory (replaced versions, failed attempts). Readers
-resolve ``_CURRENT``; a table directory without one is read as a plain
-parquet table (its own files, not the uncommitted versions inside it),
-which is how an initial load may be staged, also in the 3-column
-(row_key, data, ts) layout, whose NULL ``op`` reads as an upsert
-(``_log``). Every read declares ``schemas.DIM_CHANGE``, so it runs no
-Spark job and never infers a schema from the files. Versions are named
-without a leading ``_``, which Spark's file index would hide; a store
-committed under the older ``_v<N>`` names reads as before, and its
-next version is numbered past them.
+``<store>/<table>_scd2/`` per (row_key, ts, op) (the SCD2 history).
+Each is one parquet file, ``part-00000.parquet``. A merge writes the
+whole new table once, with pyarrow, to the hidden
+``.part-00000.parquet.tmp`` beside it, then ``os.replace``-s that over
+the table file: the rename is the commit point. An initial load may be
+staged as that one file, also in the 3-column (row_key, data, ts)
+layout, whose NULL ``op`` reads as an upsert (``_log``). A merge refuses
+a table directory holding any other visible file (a name not starting
+with ``_`` or ``.``), since a rename cannot replace it and its rows
+would stay beside the new file. Every read declares
+``schemas.DIM_CHANGE``, so it runs no Spark job and never infers a
+schema from the files.
 
 Tombstones: Maxwell is at-least-once, so late and replayed CDC rows
 are normal input. The snapshot keeps a delete as a row with op "D", so
@@ -39,12 +36,12 @@ reads filter tombstones out. They are kept forever, with no purge
 horizon: the snapshot is bounded by the keys ever seen. Compacted per
 key, not append-only, the log keeps enrichment reads plain scans.
 
-Driver-held tables: the process keeps each table's committed version
-on the driver, as its change rows, keyed by the version's directory
-and its inode and mtime. A merge collects the batch's changes once (2
+Driver-held tables: the process keeps each table's committed file on
+the driver, as its change rows, keyed by the table directory and the
+file's inode and mtime. A merge collects the batch's changes once (2
 Spark jobs: the config broadcast and the scan, whatever the tables
 touched), folds them into the held rows and publishes the result; it
-reads the store only when the held copy is not the committed version
+reads the store only when the held copy is not the committed file
 (the first merge in a process, a commit by another writer, a staged
 table). The held snapshot rows are the rows the enrichment joins
 already collect to broadcast, plus tombstones; the driver also holds
@@ -53,18 +50,17 @@ call ``scd2_merge``). One writer per store is assumed, as with the
 reference's single DimApp.
 
 Crash contract: a merge that fails or dies at any point before the
-rename leaves ``_CURRENT`` naming the previous version, so readers and
-the next merge see the previous table, and the partial directory is
-swept by the next commit. Replays and arrival order do not change
-either store. The sweep deletes the replaced version, so a DataFrame
-read before a merge must be evaluated before it.
+rename leaves the previous table file in place, so readers and the next
+merge see the previous table; a partial temporary file is hidden from
+readers and overwritten by the next merge. Replays and arrival order do
+not change either store. A DataFrame read before a merge lists the
+file the merge replaces, so it must be evaluated before the merge:
+evaluated after it, it may fail or read the new file.
 """
 
 from __future__ import annotations
 
 import os
-import re
-import shutil
 from operator import itemgetter
 
 import pyarrow as pa
@@ -76,33 +72,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..schemas import DIM_CHANGE, TABLE_PROCESS_DIM
 from .dwd import parse_topic_db
 
-_POINTER = "_CURRENT"
-_VERSION = re.compile(r"_?v(\d+)")  # v<N>, and the older _v<N>
+_FILE = "part-00000.parquet"
 _ARROW = to_arrow_schema(DIM_CHANGE)
 
-#: table directory -> (committed version's identity, its change rows)
+#: table directory -> (committed file's identity, its change rows)
 _HELD: dict[str, tuple[tuple, list]] = {}
 
 
-def _live(path: str) -> str:
-    """The directory holding a table's committed version: the one its
-    pointer names, or the table directory itself without one."""
-    try:
-        with open(os.path.join(path, _POINTER)) as f:
-            return os.path.join(path, f.read())
-    except FileNotFoundError:
-        return path
-
-
 def _read(spark: SparkSession, path: str) -> DataFrame:
-    live = _live(path)
-    if live == path and os.path.isdir(path):  # staged: skip versions not yet committed
-        staged = sorted(os.path.join(path, e) for e in os.listdir(path)
-                        if not e.startswith(("_", ".")) and not _VERSION.fullmatch(e))
-        if not staged:
-            return spark.createDataFrame([], DIM_CHANGE)
-        return spark.read.schema(DIM_CHANGE).parquet(*staged)
-    return spark.read.schema(DIM_CHANGE).parquet(live)
+    return spark.read.schema(DIM_CHANGE).parquet(path)
 
 
 def _log(spark: SparkSession, path: str) -> DataFrame:
@@ -116,28 +94,16 @@ def _snapshot(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _publish(path: str, rows: list) -> None:
-    """Write ``rows`` ((row_key, data, op, ts) changes) as a new version
-    of the table at ``path``, one parquet file in the
-    ``schemas.DIM_CHANGE`` layout; commit it by renaming the pointer
-    over the old one, then delete what it replaced."""
+    """Write ``rows`` ((row_key, data, op, ts) changes) as the table at
+    ``path``, one parquet file in the ``schemas.DIM_CHANGE`` layout,
+    written beside the table file under a hidden name and committed by
+    renaming it over that file."""
     os.makedirs(path, exist_ok=True)
-    done = [int(m.group(1)) for m in map(_VERSION.fullmatch, os.listdir(path)) if m]
-    version = f"v{max(done, default=0) + 1}"  # never reuses a failed attempt's name
-    os.makedirs(os.path.join(path, version))
     table = pa.table({name: [r[i] for r in rows] for i, name in enumerate(_ARROW.names)},
                      schema=_ARROW)
-    pq.write_table(table, os.path.join(path, version, "part-00000.parquet"))
-    tmp = os.path.join(path, _POINTER + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(path, _POINTER))  # the commit point
-    for entry in os.listdir(path):
-        if entry not in (_POINTER, version):
-            old = os.path.join(path, entry)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            else:
-                os.remove(old)
+    tmp = os.path.join(path, f".{_FILE}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, _FILE))  # the commit point
 
 
 def dim_config(spark: SparkSession, rows: list[tuple]) -> DataFrame:
@@ -193,12 +159,10 @@ def _rank(change) -> tuple:
 
 
 def _identity(path: str) -> tuple:
-    """What names a table's committed version: its directory, inode and
-    mtime, so a commit by another writer (or a file added to the
-    version) is seen."""
-    live = _live(path)
-    st = os.stat(live)
-    return live, st.st_ino, st.st_mtime_ns
+    """What names a table's committed file: its inode and mtime, so a
+    commit by another writer is seen."""
+    st = os.stat(os.path.join(path, _FILE))
+    return st.st_ino, st.st_mtime_ns
 
 
 def _merge(spark: SparkSession, path: str, changes: list, key) -> None:
@@ -207,13 +171,18 @@ def _merge(spark: SparkSession, path: str, changes: list, key) -> None:
     greatest ``_rank`` is kept; on an exact tie the earlier one wins, a
     stored change over a batch change, the first of equal batch
     changes. The committed log is the copy held since this process's
-    last commit to ``path`` if that is still the committed version,
-    else the store's rows (an unreadable store raises). The result is
-    published and held."""
+    last commit to ``path`` if that is still the committed file, else
+    the store's rows (an unreadable store raises, and so does a table
+    directory holding other visible files). The result is published and
+    held."""
     stored = []
     if os.path.isdir(path):
-        hit = _HELD.get(path, (None, None))
-        stored = hit[1] if hit[0] == _identity(path) else _log(spark, path).collect()
+        other = sorted(e for e in os.listdir(path) if e != _FILE and not e.startswith(("_", ".")))
+        if other:
+            raise ValueError(f"DIM table {path} holds {other} beside {_FILE}; a merge "
+                             "can only replace a table that is that one file")
+        hit = _HELD.get(path)
+        stored = hit[1] if hit and hit[0] == _identity(path) else _log(spark, path).collect()
     last: dict = {}
     for change in (*stored, *changes):
         k = key(change)
@@ -236,7 +205,7 @@ def merge_dim_batch(
     table's held log (module docstring): 2 Spark jobs (the config
     broadcast and the scan of ``changes``) however many tables it
     touches, plus one read per table whose held copy is not the
-    committed version. Called from foreachBatch in streaming; replayed,
+    committed file. Called from foreachBatch in streaming; replayed,
     late and reordered batches converge to the same snapshot.
     """
     by_table: dict[str, list] = {}

@@ -210,7 +210,7 @@ def _candidate_pairs_blockpairs(emb: DataFrame, threshold: float) -> DataFrame:
         "blk", "vec_id", "embedding",
     ).dropDuplicates(["bi", "bj", "vec_id"])
 
-    def score(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def score(key, pdf):
         bi, bj = key
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
@@ -909,7 +909,7 @@ def _cluster_scoped_candidates(emb: DataFrame, threshold: float) -> DataFrame:
         .dropDuplicates(["label", "bi", "bj", "vec_id"])
     )
 
-    def score(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def score(key, pdf):
         _, bi, bj = key
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)

@@ -1,24 +1,22 @@
 """The reference's data model as Spark schemas (SURVEY.md §1).
 
-Four abstractions: Maxwell CDC envelopes (topic_db), nested behavior
-logs (topic_log), config tables (gmall_config.table_process_*), and
-wide DWS aggregate rows. All re-expressed as StructTypes for
-``from_json`` / ``createDataFrame``.
+Three abstractions: Maxwell CDC envelopes (topic_db), nested behavior
+logs (topic_log) and config tables (gmall_config.table_process_*, and
+the Debezium envelope they arrive in), plus the DIM store's change-row
+layout. All re-expressed as StructTypes for ``from_json`` /
+``createDataFrame``.
 
 Reference citations:
 - Maxwell envelope: COMMON/base/BaseSQLApp.java:54-64
 - log event: DWD:base-log/log/split/DwdBaseLog.java:96-151
 - config beans: COMMON/bean/TableProcessDim.java:15-33,
   COMMON/bean/TableProcessDwd.java:15-29
-- DWS beans: COMMON/bean/TradeSkuOrderBean.java:20-61,
-  COMMON/bean/TrafficPageViewBean.java:17-43, KeywordBean.java:15-29
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    DecimalType,
     LongType,
     MapType,
     StringType,
@@ -138,46 +136,5 @@ TABLE_PROCESS_DWD = StructType(
         StructField("source_type", S),
         StructField("sink_table", S),
         StructField("sink_columns", S),  # CSV
-    ]
-)
-
-#: dwd_trade_order_detail — all-STRING DWD Kafka schema except ts
-#: (DwdTradeOrderDetail.java:101-120)
-DWD_TRADE_ORDER_DETAIL = StructType(
-    [StructField(f, S) for f in [
-        "id", "order_id", "user_id", "sku_id", "sku_name", "province_id",
-        "activity_id", "activity_rule_id", "coupon_id", "date_id",
-        "create_time", "sku_num", "split_original_amount",
-        "split_activity_amount", "split_coupon_amount", "split_total_amount",
-    ]]
-    + [StructField("ts", L)]
-)
-
-#: DWS result-row shapes (FIXTURES.md F5); stt/edt are
-#: 'yyyy-MM-dd HH:mm:ss' strings, cur_date 'yyyy-MM-dd'.
-KEYWORD_BEAN = StructType(
-    [
-        StructField("stt", S),
-        StructField("edt", S),
-        StructField("cur_date", S),
-        StructField("keyword", S),
-        StructField("keyword_count", L),
-    ]
-)
-TRAFFIC_PAGE_VIEW_BEAN = StructType(
-    [StructField(f, S) for f in ["stt", "edt", "cur_date", "vc", "ch", "ar", "is_new"]]
-    + [StructField(f, L) for f in ["uv_ct", "sv_ct", "pv_ct", "dur_sum"]]
-)
-TRADE_SKU_ORDER_BEAN = StructType(
-    [StructField(f, S) for f in [
-        "stt", "edt", "cur_date", "sku_id", "sku_name", "spu_id", "spu_name",
-        "trademark_id", "trademark_name", "category1_id", "category1_name",
-        "category2_id", "category2_name", "category3_id", "category3_name",
-    ]]
-    + [
-        StructField("original_amount", DecimalType(38, 2)),
-        StructField("activity_reduce_amount", DecimalType(38, 2)),
-        StructField("coupon_reduce_amount", DecimalType(38, 2)),
-        StructField("order_amount", DecimalType(38, 2)),
     ]
 )

@@ -1,8 +1,9 @@
-"""The DIM store's publish path: each merge writes its snapshot once and
-commits it with a pointer swap, reads declare the schema, a replayed
-batch converges, a delete is kept as a tombstone, a crash mid-merge
-leaves the previous snapshot, and the snapshot held on the driver
-follows the committed version."""
+"""The DIM store's publish path: each table is one file, which a merge
+writes once and commits by renaming it into place; reads declare the
+schema, a replayed batch converges, a delete is kept as a tombstone, a
+crash mid-merge leaves the previous snapshot, a table of other files is
+refused, and the snapshot held on the driver follows the committed
+file."""
 
 from __future__ import annotations
 
@@ -50,8 +51,7 @@ def _names(spark, store):
 
 def _stage(directory, rows):
     """Write ``rows`` ((row_key, tm_name, ts)) as one parquet file in the
-    3-column (row_key, data, ts) layout, as an initial load (or an older
-    writer) would."""
+    3-column (row_key, data, ts) layout, as an initial load would."""
     os.makedirs(directory)
     pq.write_table(
         pa.table({"row_key": [k for k, _, _ in rows],
@@ -151,10 +151,10 @@ def test_merge_runs_two_jobs_however_many_tables(spark, tmp_path):
 STAGED = [("1", "a2", 150), ("2", "b", 100), ("3", "c", 100)]  # B1, merged
 
 
-def test_merge_over_table_without_pointer(spark, tmp_path):
-    """A table staged as a plain parquet directory (an initial load, or a
-    store written before the pointer existed) is merged last-write-wins,
-    and later reads see the committed version."""
+def test_merge_over_staged_table(spark, tmp_path):
+    """A table staged as its one parquet file in the 3-column layout (an
+    initial load) is merged last-write-wins, and the merge replaces that
+    file with the committed one in ``DIM_CHANGE``."""
     store = str(tmp_path / "store")
     path = os.path.join(store, T)
     _stage(path, STAGED)
@@ -164,8 +164,58 @@ def test_merge_over_table_without_pointer(spark, tmp_path):
     expected = _lww(B1, B2)
     assert {r["row_key"]: r["data"]["tm_name"] for r in merged.collect()} == expected
     assert _names(spark, store) == expected
-    assert "part-00000.parquet" not in os.listdir(path)
-    assert spark.read.parquet(dim._live(path)).schema == DIM_CHANGE
+    assert os.listdir(path) == ["part-00000.parquet"]
+    assert spark.read.parquet(path).schema == DIM_CHANGE
+
+
+def test_merge_refuses_a_table_with_other_files(spark, tmp_path):
+    """A table directory holding a second part file (a multi-file staged
+    load) cannot be replaced by one rename: the merge raises, names the
+    file and leaves the table as it read before."""
+    store = str(tmp_path / "store")
+    path = os.path.join(store, T)
+    _stage(path, STAGED)
+    _stage(str(tmp_path / "second"), [("9", "z", 120)])
+    os.replace(str(tmp_path / "second" / "part-00000.parquet"),
+               os.path.join(path, "part-00001.parquet"))
+    before = _names(spark, store)
+    assert before == {**_lww(B1), "9": "z"}
+    with pytest.raises(ValueError, match="part-00001.parquet"):
+        dim.merge_dim_batch(spark, _changes(spark, B2), store)
+    assert sorted(os.listdir(path)) == ["part-00000.parquet", "part-00001.parquet"]
+    assert _names(spark, store) == before
+
+
+def test_benchmark_staged_store_merges_in_place(spark, tmp_path):
+    """The store the benchmark stages (``perfbench.gen.write_dim_store``,
+    3-column files) is the committed layout: one merge leaves each
+    touched table its one file, now in ``DIM_CHANGE``, reading as the
+    plain-Python last write over the staged rows and the batch."""
+    from perfbench.gen import write_dim_store
+
+    store = str(tmp_path / "store")
+    assert write_dim_store(store) > 0
+    tables = {"dim_base_trademark": "tm_name", "dim_base_province": "name"}
+    staged = {t: pq.read_table(os.path.join(store, t, "part-00000.parquet")).to_pylist()
+              for t in tables}
+    batch = []
+    for t, col in tables.items():
+        first, second = staged[t][:2]
+        ts = max(r["ts"] for r in staged[t])
+        batch += [(t, first["row_key"], {"id": first["row_key"], col: "renamed"}, "U", ts + 1),
+                  (t, second["row_key"], None, "D", ts + 1),
+                  (t, "new", {"id": "new", col: "added"}, "U", ts + 2),
+                  (t, first["row_key"], {"id": first["row_key"], col: "older"}, "U", ts - 1)]
+    dim.merge_dim_batch(spark, spark.createDataFrame(batch, CHANGES), store)
+
+    for t, col in tables.items():
+        path = os.path.join(store, t)
+        assert os.listdir(path) == ["part-00000.parquet"]
+        assert spark.read.parquet(path).schema == DIM_CHANGE
+        rows = [(r["row_key"], dict(r["data"])[col], "U", r["ts"]) for r in staged[t]]
+        rows += [(key, data and data[col], op, ts) for tt, key, data, op, ts in batch if tt == t]
+        got = {r["row_key"]: r[col] for r in dim.dim_snapshot(spark, store, t, [col]).collect()}
+        assert got == _lww(rows)
 
 
 def _crash_writes_into(monkeypatch, table_dir):
@@ -256,42 +306,30 @@ def test_as_of_after_last_change_equals_snapshot(spark, tmp_path):
     assert as_of == _names(spark, store) == _lww(B1, B2)
 
 
-def test_versions_are_not_hidden_and_older_names_continue(spark, tmp_path):
-    """Versions are named so Spark's file index does not treat them as
-    hidden; a store committed under the older ``_v<N>`` name reads as
-    before, and its next merge commits a version numbered past it."""
-    store = str(tmp_path / "store")
-    _apply(spark, store, "merge_dim_batch", B1)
-    live = os.path.basename(dim._live(os.path.join(store, T)))
-    assert not live.startswith(("_", "."))
-
-    old = str(tmp_path / "old")
-    path = os.path.join(old, T)
-    _stage(os.path.join(path, "_v3"), STAGED)
-    with open(os.path.join(path, "_CURRENT"), "w") as f:
-        f.write("_v3")
-    assert _names(spark, old) == _lww(B1)
-    dim.merge_dim_batch(spark, _changes(spark, B2), old)
-    assert os.path.basename(dim._live(path)) == "v4"
-    assert sorted(os.listdir(path)) == ["_CURRENT", "v4"]
-    assert _names(spark, old) == _lww(B1, B2)
-
-
 @pytest.mark.parametrize("staged", [False, True], ids=["new", "staged"])
 def test_crash_in_first_merge_keeps_staged_rows(spark, tmp_path, staged):
-    """A first merge that dies while writing leaves a table without a
-    pointer and a partial version inside it: readers see only the
-    staged rows (none for a new table), and the next merge succeeds."""
+    """A first merge that dies while writing leaves its partial file under
+    the hidden temporary name and the table file as it was (the staged
+    one, or none for a new table): readers see only the staged rows,
+    and the next merge succeeds."""
     store = str(tmp_path / "store")
     path = os.path.join(store, T)
+    table_file = os.path.join(path, "part-00000.parquet")
     before = [tuple(r) for r in (STAGED if staged else [])]
     if staged:
         _stage(path, STAGED)
+        with open(table_file, "rb") as f:
+            staged_bytes = f.read()
     with pytest.MonkeyPatch.context() as m:
         _crash_writes_into(m, path)
         with pytest.raises(Exception, match="injected crash"):
             _apply(spark, store, "merge_dim_batch", B2)
-    assert "v1" in os.listdir(path) and "_CURRENT" not in os.listdir(path)
+    assert ".part-00000.parquet.tmp" in os.listdir(path)
+    if staged:
+        with open(table_file, "rb") as f:
+            assert f.read() == staged_bytes
+    else:
+        assert not os.path.exists(table_file)
     assert _names(spark, store) == {k: n for k, n, _ in before}
 
     _apply(spark, store, "merge_dim_batch", B2)
@@ -340,7 +378,7 @@ def test_held_snapshot_follows_the_rule(spark, tmp_path, seed):
 
 
 def test_merge_reads_a_version_committed_behind_its_back(spark, tmp_path):
-    """A version another writer commits through the same publish path
+    """A table file another writer commits through the same publish path
     replaces the driver's held copy: the next merge starts from it."""
     store = str(tmp_path / "store")
     _apply(spark, store, "merge_dim_batch", B1)

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from gmall_realtime_ck_spark import serving
 from gmall_realtime_ck_spark.gmall import dim, dwd, dws, fixtures
+from gmall_realtime_ck_spark.schemas import TABLE_PROCESS_DWD
 
 
 @pytest.fixture(scope="module")
@@ -132,10 +133,7 @@ def test_comment_lookup_join(db, base_dic):
 
 
 def test_dynamic_split_routes_and_prunes(db, spark):
-    cfg = spark.createDataFrame(
-        fixtures.TABLE_PROCESS_DWD_ROWS,
-        "source_table string, source_type string, sink_table string, sink_columns string",
-    )
+    cfg = spark.createDataFrame(fixtures.TABLE_PROCESS_DWD_ROWS, TABLE_PROCESS_DWD)
     out = dwd.dynamic_split(db, cfg)
     topics = {r["topic"] for r in out.select("topic").distinct().collect()}
     assert "dwd_trade_cart_add" in topics
@@ -232,8 +230,9 @@ def test_dim_pipeline_merge(db_raw, spark, tmp_path):
 
 def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
     """A DIM store that exists but cannot be read (a torn part file
-    listed first) makes the merge raise; it must never be replaced by
-    the batch alone. Only a missing store starts from the batch."""
+    beside the table file, or a torn table file) makes the merge raise;
+    it must never be replaced by the batch alone. Only a missing store
+    starts from the batch."""
     import json
     import os
 
@@ -252,15 +251,23 @@ def test_dim_merge_raises_on_unreadable_store(spark, tmp_path):
 
     store = str(tmp_path / "dimstore")
     assert merge(sku_lines(range(100), 1))["dim_sku_info"].count() == 100
-    live = dim._live(os.path.join(store, "dim_sku_info"))  # the committed snapshot
-    with open(os.path.join(live, "part-0.parquet"), "wb") as f:
-        f.write(b"torn")  # sorts before every part file Spark wrote
+    table = os.path.join(store, "dim_sku_info")
+    with open(os.path.join(table, "part-0.parquet"), "wb") as f:
+        f.write(b"torn")
 
     with pytest.raises(Exception):
         merge(sku_lines([100], 2))
     kept = (spark.read.schema(DIM_CHANGE).option("ignoreCorruptFiles", "true")
-            .parquet(dim._live(os.path.join(store, "dim_sku_info"))))
+            .parquet(table))
     assert kept.count() == 100
+
+    os.remove(os.path.join(table, "part-0.parquet"))
+    with open(os.path.join(table, "part-00000.parquet"), "wb") as f:
+        f.write(b"torn")
+    with pytest.raises(Exception):
+        merge(sku_lines([100], 2))
+    with open(os.path.join(table, "part-00000.parquet"), "rb") as f:
+        assert f.read() == b"torn"
 
 
 # ---------------------------------------------------------------------------
