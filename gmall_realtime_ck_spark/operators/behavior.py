@@ -592,15 +592,24 @@ def events_retention_cohorts(t: dict[str, DataFrame]) -> DataFrame:
     more keyed aggregate, and cohort sizes (≤ |days| rows) broadcast
     into the final permille map. No windows, no sorts, no Python.
     """
-    ev = t["events"].select("user_id", F.to_date("ts").alias("d"))
-    return retention_from_user_days(ev.distinct())
+    return retention_from_user_days(user_day_counts(t["events"]))
+
+
+def user_day_counts(events: DataFrame) -> DataFrame:
+    """Per-(user_id, d) event counts — the retention matrix's one keyed
+    aggregate, kept in complete mode by the streaming twin. Selecting
+    ``d`` before grouping keeps the batch plan the plain distinct
+    (user, day) aggregate: the retention algebra reads no count."""
+    ev = events.select("user_id", F.to_date("ts").alias("d"))
+    return ev.groupBy("user_id", "d").agg(F.count(F.lit(1)).alias("n"))
 
 
 def retention_from_user_days(user_days: DataFrame) -> DataFrame:
-    """The retention algebra over DISTINCT (user_id, d) activity rows —
-    shared by the batch ``events_retention_cohorts`` and the
-    ``flow_retention_cohorts`` streaming poll step (the input there is
-    a user-day memory table; every join renames its key first, so the
+    """The retention algebra over DISTINCT (user_id, d) activity rows
+    (it reads only those two columns) — shared by the batch
+    ``events_retention_cohorts`` and the ``flow_retention_cohorts``
+    streaming poll step (the input there is the ``user_day_counts``
+    memory table; every join renames its key first, so the
     shared-lineage self-join resolution holds — the events_anomaly_mad
     lesson)."""
     first = user_days.groupBy("user_id").agg(F.min("d").alias("cohort"))

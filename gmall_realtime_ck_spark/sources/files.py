@@ -71,15 +71,3 @@ def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
         .json(path)
     )
 
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Batch ORC reader — columnar like parquet, schema from footers
-    (no inference scan needed)."""
-    return spark.read.orc(path)
-
-
-def jsonl_stream(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    """Streaming JSON-lines source (corpus shards landing in a
-    directory) — schema-pinned; each micro-batch picks up new files."""
-    configure_runtime(spark)
-    return spark.readStream.schema(schema).format("json").load(path)

@@ -1,9 +1,10 @@
 """Keyed stateful streaming operators (SURVEY.md §2.6, T1-T7).
 
 The reference implements these with Flink ValueState + TTL; here they
-are ``applyInPandasWithState`` (Arrow-batched, grouped state) or the
-built-in ``dropDuplicatesWithinWatermark``. Each has a batch oracle in
-``operators.stateful`` — tests assert batch ≡ stream.
+are ``applyInPandasWithState`` (Arrow-batched, grouped state); T1's
+keyed dedup is the built-in ``dropDuplicatesWithinWatermark``, called
+in ``pipelines.flow_dedup_first``. Each has a batch oracle — tests
+assert batch ≡ stream.
 
 Emission logic is arrival-order-dependent per record (as in the
 reference), but the *aggregated* outputs (per-day UV counts, etc.) are
@@ -215,15 +216,6 @@ def dedup_keep_latest(df: DataFrame, key_cols: list[str], out_schema: StructType
     )
 
 
-def dedup_within_watermark(df: DataFrame, keys: list[str], ts_col: str, delay: str) -> DataFrame:
-    """T1/T2 streaming — keyed dedup with bounded state
-    (DwsTradeSkuOrderWindow.java:196-233, state TTL 10 s → here the
-    watermark delay bounds the dedup horizon). Keeps the first arrival
-    per key; Spark evicts state once the watermark passes.
-    """
-    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
-
-
 _FUNNEL_STATE = StructType(
     [
         StructField("t1", LongType()),
@@ -409,258 +401,102 @@ def admit_first_per_hash(docs: DataFrame) -> DataFrame:
     )
 
 
-def _kmv_merge(cur, batch, k: int, sat: int):
-    """One KMV state transition: merge a batch of hashes into the
-    running K-smallest set. Returns (new_set, new_sat). K-smallest of
-    a union equals K-smallest regardless of arrival order or batch
-    boundaries, so the whole micro-batch merges as one vectorized
-    numpy unique instead of row-at-a-time compare-against-max; ``sat``
-    latches once anything is ever evicted/rejected (union exceeded K),
-    which is exactly the "distinct count exceeded K" predicate —
-    property-tested against a pure-set model in test_streaming."""
-    import numpy as np
-
-    merged = np.unique(np.concatenate([cur, batch]))
-    if len(merged) > k:
-        return merged[:k], 1
-    return merged, sat
-
-
-def _kmv_decode(hs: str):
-    """Comma-joined int64 state string → int64 array (the KMV hash set
-    and both halves of the domain-cap pair state)."""
-    import numpy as np
-
-    return np.array(hs.split(","), dtype="int64") if hs else np.array([], dtype="int64")
-
-
-_KMV_STATE = StructType(
-    [StructField("hashes", StringType()), StructField("saturated", LongType())]
-)
-_KMV_OUT = StructType(
+_K_FIRST_STATE = StructType(
     [
-        StructField("d", DateType()),
-        StructField("sketch_size", LongType()),
-        StructField("saturated", LongType()),
-        StructField("mk", LongType()),
+        StructField("kept", StringType()),
+        StructField("full", LongType()),
+        StructField("upd", LongType()),
     ]
 )
 
 
-def kmv_sketch_stream(dh: DataFrame, k: int) -> DataFrame:
-    """Bounded-state KMV distinct-count sketch, live (Bar-Yossef et al.
-    2002): per event-day, state is exactly the running K-smallest set
-    of distinct user hashes (≤ K longs) plus one saturation flag — the
-    production form of ``flow_kmv`` whose naive twin kept the full
-    distinct (day, hash) set in dropDuplicates state. KMV's insert is
-    a compare-against-max, and the K smallest of a union equal the K
-    smallest regardless of arrival order, so each micro-batch merges
-    vectorized (numpy unique over state ∪ batch) instead of row-at-a-
-    time; an evicted hash can never re-enter (the set max only
-    decreases), so the retained set is always the true K-smallest of
-    everything seen.
+def _decode(s: str, width: int):
+    """Comma-joined int64 state string → ``(n, width)`` int64 array."""
+    import numpy as np
 
-    ``saturated`` records whether any arrival was ever evicted or
-    rejected: 0 ⇒ the set IS the day's full distinct-hash set (exact
-    count), 1 ⇒ estimate via (K−1)·2⁴⁴ div max(set). Each update emits
-    one row per touched day; ``sketch_size``/``saturated`` are
-    monotone non-decreasing and ``mk`` (the K-th smallest, null until
-    the set fills) monotone non-increasing, so a poll-time
-    max/max/min per day reads the current sketch.
+    return np.array(s.split(",") if s else [], dtype="int64").reshape(-1, width)
 
-    Input must carry a watermarked event-time column: state for a day
-    is expired via EventTimeTimeout once the watermark passes day-end
-    + a 1-day grace — closed days cost nothing forever after, keeping
-    total state O(open days × K) longs.
+
+def _k_first(cur, batch, k: int, full: int):
+    """One k-first-set state transition: the k lexicographically-first
+    DISTINCT rows of ``cur ∪ batch`` (int64 arrays of one width), and
+    ``full`` latched to 1 once anything is cut. The k first rows of a
+    union are the k first of the k first of its parts, so arrival order
+    and batch boundaries are invisible (property-tested against a
+    pure-set model in test_streaming) and a micro-batch merges as one
+    vectorized lexsort; a replayed row collapses before the cut, so it
+    cannot evict a kept one."""
+    import numpy as np
+
+    rows = np.concatenate([cur, batch])
+    rows = rows[np.lexsort(rows.T[::-1])]
+    if len(rows):
+        rows = rows[np.r_[True, (rows[1:] != rows[:-1]).any(axis=1)]]
+    return rows[:k], int(full or len(rows) > k)
+
+
+def k_first_stream(df: DataFrame, key: str, cols: list[str], k: int) -> DataFrame:
+    """Bounded keyed state: per ``key``, exactly the k first distinct
+    ``cols`` tuples (int64) under their lexicographic order, plus a
+    ``full`` flag — 0 ⇒ the kept set IS the key's whole distinct set,
+    1 ⇒ something was cut. With ``cols=["h"]`` this is the KMV set
+    sketch (Bar-Yossef et al. 2002: the K smallest distinct hashes,
+    ``flow_kmv``/``flow_overlap_kmv``); with ``["h", "doc_id"]`` it is
+    the per-domain quota (the CAP first documents by content hash,
+    ``flow_domain_cap``). The k first set of a union is arrival-order
+    independent, so the final set equals the batch one and the batch
+    oracles apply verbatim. State per key is ≤ k·len(cols) longs.
+
+    Output (update mode), rows ``(key, upd, *cols, full)``: a key emits
+    its kept set only when a micro-batch changes it (set or flag),
+    stamped with a per-key monotone ``upd``; a batch of already-kept or
+    above-the-cut rows emits nothing. Update-mode sinks append, so the
+    output is a CHANGELOG: consumers compact latest-``upd``-wins per key
+    with ``pipelines.compact_latest_snapshot``.
+
+    Expiry follows the key's type. A ``DateType`` key (an event day)
+    arms EventTimeTimeout: the input must carry a watermarked event-time
+    column, and a day's state is dropped without emitting once the
+    watermark passes the day's end plus a 1-day grace, keeping total
+    state O(open days × k). Any other key (event types, sources: a
+    low-cardinality dimension) keeps its state forever.
     """
+    dated = isinstance(df.schema[key].dataType, DateType)
+    out = StructType(
+        [df.schema[key], StructField("upd", LongType())]
+        + [StructField(c, LongType()) for c in cols + ["full"]]
+    )
 
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (d,) = key
+    def fn(key_, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        import numpy as np
+
+        (kv,) = key_
         if state.hasTimedOut:
             state.remove()
-            yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in _KMV_OUT.fields})
             return
-        if state.exists:
-            hs, sat = state.get
-            cur, sat = _kmv_decode(hs), int(sat)
-        else:
-            cur, sat = _kmv_decode(""), 0
+        kept, full, upd = state.get if state.exists else ("", 0, 0)
+        kept, full, upd = _decode(kept, len(cols)), int(full), int(upd)
+        prev, prev_full = kept, full
         for pdf in pdf_iter:
-            cur, sat = _kmv_merge(cur, pdf["h"].to_numpy(dtype="int64"), k, sat)
-        state.update((",".join(map(str, cur.tolist())), sat))
-        # day end + the 1-day grace
-        expire_ms = int(pd.Timestamp(d).value // 1_000_000) + 2 * 24 * 3600 * 1000
-        state.setTimeoutTimestamp(max(expire_ms, state.getCurrentWatermarkMs() + 1))
-        yield pd.DataFrame(
-            {
-                "d": [d],
-                "sketch_size": [len(cur)],
-                "saturated": [sat],
-                "mk": [int(cur[-1]) if len(cur) == k else None],
-            }
-        )
-
-    return dh.groupBy("d").applyInPandasWithState(
-        fn, _KMV_OUT, _KMV_STATE, "update", GroupStateTimeout.EventTimeTimeout
-    )
-
-
-_KMVSET_STATE = StructType(
-    [
-        StructField("hashes", StringType()),
-        StructField("saturated", LongType()),
-        StructField("upd", LongType()),
-    ]
-)
-_KMVSET_OUT = StructType(
-    [
-        StructField("tp", StringType()),
-        StructField("upd", LongType()),
-        StructField("h", LongType()),
-        StructField("full", LongType()),
-    ]
-)
-
-
-def kmv_set_sketch_stream(dh: DataFrame, k: int) -> DataFrame:
-    """Bounded-state KMV SET sketch per string key: state is the
-    running K-smallest distinct-hash set (≤ K longs) + saturation flag,
-    merged vectorized per Arrow batch exactly like ``kmv_sketch_stream``
-    — but each update emits the sketch's CONTENTS (one row per retained
-    hash, stamped with a per-key update counter) rather than just its
-    summary, so poll-time consumers can run set-OPERATION algebra
-    (union/intersection/Jaccard between keys — see
-    ``relational.kmv_pair_overlap``) on the latest snapshot: filter to
-    each key's max ``upd``. The K-smallest set is arrival-order
-    independent, so the final snapshot equals the batch sketch.
-
-    Output contract (update mode): a key re-emits its ≤ K rows ONLY
-    when the micro-batch actually changed the sketch — a batch of
-    already-seen / too-large hashes emits nothing (a K-smallest set
-    converges, so at production poll rates most batches go quiet and
-    the sink stays near its steady-state size instead of growing by
-    K rows per key per batch). Consumers must still treat the sink as
-    a CHANGELOG and compact latest-``upd``-wins per key (the poll-time
-    filter in ``pipelines.flow_overlap_kmv`` does exactly this):
-    update-mode sinks append, so superseded snapshots remain until
-    compaction. Rows-per-poll ≤ keys × K is pinned by
-    tests/test_streaming.py::test_kmv_set_sketch_emits_only_on_change.
-
-    No timeout: keys here are low-cardinality categories (event types,
-    sources), so total state is O(keys × K) longs forever — the
-    day-keyed sibling above is the one that needs event-time expiry.
-    """
-    import numpy as np
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (tp,) = key
-        if state.exists:
-            hs, sat, upd = state.get
-            cur, sat, upd = _kmv_decode(hs), int(sat), int(upd)
-        else:
-            cur, sat, upd = _kmv_decode(""), 0, 0
-        prev, prev_sat, existed = cur, sat, state.exists
-        for pdf in pdf_iter:
-            cur, sat = _kmv_merge(cur, pdf["h"].to_numpy(dtype="int64"), k, sat)
-        if existed and sat == prev_sat and np.array_equal(cur, prev):
-            # sketch unchanged — emit nothing, keep state (and upd) as-is
-            yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in _KMVSET_OUT.fields})
+            kept, full = _k_first(kept, pdf[cols].to_numpy(dtype="int64"), k, full)
+        if dated:
+            # day end + the 1-day grace, set on every call, unchanged set
+            # or not: GroupState documents a timeout as lasting until the
+            # next call (PySpark 4.1 happens to carry the old one over)
+            expire_ms = int(pd.Timestamp(kv).value // 1_000_000) + 2 * 24 * 3600 * 1000
+            state.setTimeoutTimestamp(max(expire_ms, state.getCurrentWatermarkMs() + 1))
+        if state.exists and full == prev_full and np.array_equal(kept, prev):
             return
         upd += 1
-        state.update((",".join(map(str, cur.tolist())), sat, upd))
+        state.update((",".join(map(str, kept.ravel().tolist())), full, upd))
         yield pd.DataFrame(
-            {"tp": tp, "upd": upd, "h": cur.tolist(), "full": sat}
+            {key: kv, "upd": upd, **{c: kept[:, i] for i, c in enumerate(cols)}, "full": full}
         )
 
-    return dh.groupBy("tp").applyInPandasWithState(
-        fn, _KMVSET_OUT, _KMVSET_STATE, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-_DOMCAP_STATE = StructType(
-    [
-        StructField("hashes", StringType()),
-        StructField("ids", StringType()),
-        StructField("upd", LongType()),
-    ]
-)
-_DOMCAP_OUT = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("upd", LongType()),
-        StructField("h", LongType()),
-        StructField("doc_id", LongType()),
-    ]
-)
-
-
-def _pair_merge(cur_h, cur_d, bh, bd, k: int):
-    """One domain-cap state transition: merge a batch of (h, doc_id)
-    pairs into the running K-first set under the total order
-    (h, doc_id). Top-K sets under a total order compose (the same law
-    the two-level ``topk_per_key`` rank rests on), so the whole
-    micro-batch merges as one vectorized lexsort instead of row-at-a-
-    time; exact duplicate pairs (a replayed document) collapse before
-    the cut so replays cannot evict a legitimately-kept doc."""
-    import numpy as np
-
-    h = np.concatenate([cur_h, bh])
-    d = np.concatenate([cur_d, bd])
-    order = np.lexsort((d, h))  # primary h, tie-break doc_id
-    h, d = h[order], d[order]
-    if len(h):
-        keep = np.ones(len(h), dtype=bool)
-        keep[1:] = (h[1:] != h[:-1]) | (d[1:] != d[:-1])
-        h, d = h[keep], d[keep]
-    return h[:k], d[:k]
-
-
-def domain_cap_stream(sh: DataFrame, cap: int) -> DataFrame:
-    """Streaming per-domain quota admission with BOUNDED state: per
-    source, state is exactly the running CAP-first set of (h, doc_id)
-    pairs under content-hash order (2·CAP longs — the streaming twin
-    of ``sampling.sample_domain_cap``, and the admission an ingest
-    pipeline runs live so no domain floods the mixture between batch
-    re-caps). The CAP-first set of a union is arrival-order
-    independent, so the final snapshot equals the batch cap exactly
-    and its oracle applies verbatim.
-
-    Same changelog contract as ``kmv_sketch_stream``'s set sibling: a
-    key re-emits its ≤ CAP rows only when a micro-batch actually
-    changes the kept set (stamped with a per-key ``upd`` counter);
-    consumers compact latest-``upd``-wins per source. No timeout —
-    sources are a low-cardinality dimension, total state
-    O(sources × CAP) longs.
-    """
-    import numpy as np
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (src,) = key
-        if state.exists:
-            hs, ids, upd = state.get
-            cur_h, cur_d, upd = _kmv_decode(hs), _kmv_decode(ids), int(upd)
-        else:
-            cur_h, cur_d, upd = _kmv_decode(""), _kmv_decode(""), 0
-        prev_h, prev_d, existed = cur_h, cur_d, state.exists
-        for pdf in pdf_iter:
-            cur_h, cur_d = _pair_merge(
-                cur_h,
-                cur_d,
-                pdf["h"].to_numpy(dtype="int64"),
-                pdf["doc_id"].to_numpy(dtype="int64"),
-                cap,
-            )
-        if existed and np.array_equal(cur_h, prev_h) and np.array_equal(cur_d, prev_d):
-            yield pd.DataFrame({f.name: pd.Series(dtype="object") for f in _DOMCAP_OUT.fields})
-            return
-        upd += 1
-        state.update(
-            (",".join(map(str, cur_h.tolist())), ",".join(map(str, cur_d.tolist())), upd)
-        )
-        yield pd.DataFrame(
-            {"source": src, "upd": upd, "h": cur_h.tolist(), "doc_id": cur_d.tolist()}
-        )
-
-    return sh.groupBy("source").applyInPandasWithState(
-        fn, _DOMCAP_OUT, _DOMCAP_STATE, "update", GroupStateTimeout.NoTimeout
+    return df.groupBy(key).applyInPandasWithState(
+        fn,
+        out,
+        _K_FIRST_STATE,
+        "update",
+        GroupStateTimeout.EventTimeTimeout if dated else GroupStateTimeout.NoTimeout,
     )

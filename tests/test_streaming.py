@@ -356,26 +356,20 @@ def test_spine_twin_stream_equals_batch(spark, tables, flow):
     assert got == want
 
 
-def test_flow_kmv_bounded_state_matches_batch(spark, tables):
-    """r6 verdict #2: the KMV streaming twin must hold BOUNDED state —
-    one state-store row per open day (each carrying ≤ K longs), not
-    the naive O(distinct (day, hash)) dropDuplicates set — and its
-    per-day estimate must still equal the batch sketch exactly."""
+def _state_rows(q, metric="numRowsTotal"):
+    """Per micro-batch, the summed state-operator ``metric``."""
     import json
-    import uuid
 
-    from gmall_realtime_ck_spark.operators.relational import (
-        _H44_SPARK,
-        KMV_K,
-        approx_uv_kmv,
-    )
+    return [
+        sum(s.get(metric, 0) for s in json.loads(p.json).get("stateOperators") or [])
+        for p in q.recentProgress
+    ]
 
-    ev = pipelines.events_file_stream(spark, SF_DIR).withWatermark("ts", "1 day")
-    dh = ev.select("ts", F.to_date("ts").alias("d"), F.expr(_H44_SPARK).alias("h"))
-    name = "kmvstate" + uuid.uuid4().hex[:8]
-    ckpt = pipelines._process_tempdir("ckpt_")
+
+def _run_k_first(df, key, cols, k, name, ckpt):
+    """``state.k_first_stream`` as a bounded update-mode memory query."""
     q = (
-        state.kmv_sketch_stream(dh, KMV_K)
+        state.k_first_stream(df, key, cols, k)
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -384,24 +378,243 @@ def test_flow_kmv_bounded_state_matches_batch(spark, tables):
         .start()
     )
     q.awaitTermination()
-    days = tables["events"].select(F.to_date("ts")).distinct().count()
-    state_rows = max(
-        sum(s.get("numRowsTotal", 0) for s in json.loads(p.json).get("stateOperators") or [])
-        for p in q.recentProgress
-    )
-    assert 0 < state_rows <= days, (state_rows, days)
-    emitted = spark.table(name)
-    assert emitted.agg(F.max("sketch_size")).first()[0] <= KMV_K
+    return q
 
-    got = {
-        r["day"]: (r["sketch_size"], r["uv_kmv"])
-        for r in pipelines.flow_kmv(spark, SF_DIR).collect()
-    }
-    want = {
-        r["day"]: (min(r["n_hashes"], KMV_K), r["uv_kmv"])
-        for r in approx_uv_kmv(tables).collect()
-    }
+
+@pytest.mark.parametrize("flow", ["flow_kmv", "flow_overlap_kmv", "flow_domain_cap"])
+def test_k_first_bounded_state_matches_batch(spark, tables, flow):
+    """r6 verdict #2: each k-first-set twin must hold BOUNDED state —
+    one state-store row per key (event day, event type or source), each
+    carrying ≤ k tuples, never the naive O(distinct rows) dropDuplicates
+    set — emit ≤ k rows per (key, upd) snapshot, and its poll-time
+    result over the latest snapshot must still equal the batch sketch
+    or quota exactly (the k first set is arrival-order independent)."""
+    import uuid
+
+    from gmall_realtime_ck_spark.operators.relational import (
+        _H44_SPARK,
+        KMV_K,
+        approx_overlap_kmv,
+        approx_uv_kmv,
+    )
+    from gmall_realtime_ck_spark.operators.sampling import DOMAIN_CAP, sample_domain_cap
+    from gmall_realtime_ck_spark.operators.text import H28_SPARK
+
+    if flow == "flow_domain_cap":
+        docs = pipelines.documents_file_stream(spark, SF_DIR)
+        df = docs.select("source", F.expr(H28_SPARK.format(c="text")).alias("h"), "doc_id")
+        key, cols, k = "source", ["h", "doc_id"], DOMAIN_CAP
+        keys = tables["documents"].select("source")
+    elif flow == "flow_kmv":
+        ev = pipelines.events_file_stream(spark, SF_DIR).withWatermark("ts", "1 day")
+        df = ev.select("ts", F.to_date("ts").alias("d"), F.expr(_H44_SPARK).alias("h"))
+        key, cols, k = "d", ["h"], KMV_K
+        keys = tables["events"].select(F.to_date("ts"))
+    else:
+        ev = pipelines.events_file_stream(spark, SF_DIR)
+        df = ev.select(F.col("event_type").alias("tp"), F.expr(_H44_SPARK).alias("h"))
+        key, cols, k = "tp", ["h"], KMV_K
+        keys = tables["events"].select("event_type")
+    name = "kfirst" + uuid.uuid4().hex[:8]
+    q = _run_k_first(df, key, cols, k, name, pipelines._process_tempdir("ckpt_"))
+    n_keys = keys.distinct().count()
+    state_rows = max(_state_rows(q))
+    assert 0 < state_rows <= n_keys, (state_rows, n_keys)
+    per_upd = spark.table(name).groupBy(key, "upd").count()
+    assert per_upd.agg(F.max("count")).first()[0] <= k
+
+    out = getattr(pipelines, flow)(spark, SF_DIR)
+    if flow == "flow_kmv":
+        got = {r["day"]: (r["sketch_size"], r["uv_kmv"]) for r in out.collect()}
+        want = {
+            r["day"]: (min(r["n_hashes"], KMV_K), r["uv_kmv"])
+            for r in approx_uv_kmv(tables).collect()
+        }
+    else:
+        batch = approx_overlap_kmv if flow == "flow_overlap_kmv" else sample_domain_cap
+        got = sorted(map(tuple, out.collect()))
+        want = sorted(map(tuple, batch(tables).collect()))
     assert got == want
+
+
+@pytest.mark.parametrize("width", [1, 2])
+def test_k_first_merge_property_matches_set_model(width):
+    """Property (hypothesis, no Spark): for ANY sequence of int64 rows
+    (duplicates included), ANY permutation and ANY batch boundaries,
+    folding _k_first over the batches yields exactly the k
+    lexicographically-first DISTINCT rows, with ``full`` ≡ (distinct
+    count > k), and the kept rows survive the state-string round trip.
+    Width 1 is the KMV set sketch, width 2 the (h, doc_id) domain cap:
+    arrival order and batching must be invisible to both."""
+    import numpy as np
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from gmall_realtime_ck_spark.streaming.state import _decode, _k_first
+
+    row = (
+        st.tuples(st.integers(min_value=0, max_value=40))
+        if width == 1
+        else st.tuples(st.integers(min_value=0, max_value=8), st.integers(min_value=0, max_value=30))
+    )
+
+    @settings(max_examples=200, deadline=None)
+    @given(
+        st.lists(row, max_size=60),
+        st.integers(min_value=1, max_value=10),
+        st.randoms(use_true_random=False),
+    )
+    def check(rows, k, rng):
+        rng.shuffle(rows)
+        kept, full = _decode("", width), 0
+        i = 0
+        while i < len(rows):
+            j = i + rng.randint(1, max(1, len(rows) - i))
+            batch = np.array(rows[i:j], dtype="int64").reshape(-1, width)
+            kept, full = _k_first(kept, batch, k, full)
+            i = j
+        distinct = sorted(set(rows))
+        assert list(map(tuple, kept.tolist())) == distinct[:k]
+        assert full == (1 if len(distinct) > k else 0)
+        # round-trip through the state-store string encoding
+        encoded = ",".join(map(str, kept.ravel().tolist()))
+        assert list(map(tuple, _decode(encoded, width).tolist())) == distinct[:k]
+
+    check()
+
+
+def _write_replay(src, batches, schema):
+    """One parquet file per micro-batch, mtimes forcing file order."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src.mkdir()
+    now = time.time() - 60
+    for i, rows in enumerate(batches):
+        p = str(src / f"b{i}.parquet")
+        pq.write_table(
+            pa.table({c: pa.array([r[j] for r in rows], t) for j, (c, t) in enumerate(schema)}),
+            p,
+        )
+        os.utime(p, (now + i, now + i))
+
+
+@pytest.mark.parametrize("width", [1, 2])
+def test_k_first_emits_only_on_change(spark, tmp_path, width):
+    """Output-contract pin (VERDICT r7 #6): k_first_stream is a
+    CHANGELOG — a micro-batch that does not change a key's kept set
+    (duplicate rows, or rows above a full set's cut) must emit NOTHING
+    for that key, a batch that does change it must emit a new ``upd``
+    snapshot of k rows, and the latest-``upd``-wins compaction view is
+    always ≤ keys × k rows. Width 1 is the KMV set sketch, width 2 the
+    domain cap."""
+    import uuid
+
+    import pyarrow as pa
+
+    from gmall_realtime_ck_spark.operators.relational import KMV_K
+    from gmall_realtime_ck_spark.operators.sampling import DOMAIN_CAP
+
+    if width == 1:
+        key, cols, k = "tp", ["h"], KMV_K
+        batches = [
+            # b1: fills + saturates the sketch (100 distinct > K)
+            [("a", h) for h in range(1, 101)],
+            # b2: pure duplicates -> sketch unchanged, must emit nothing
+            [("a", h) for h in range(1, 51)],
+            # b3: hash above the full set's max -> rejected, emit nothing
+            [("a", 10_000)],
+            # b4: hash below the min -> sketch changes, must emit upd=2
+            [("a", 0)],
+        ]
+    else:
+        key, cols, k = "source", ["h", "doc_id"], DOMAIN_CAP
+        batches = [
+            # b1: 40 docs with h = doc_id*10 -> keeps the CAP smallest
+            [("srcA", i * 10, i) for i in range(40)],
+            # b2: replay of already-kept pairs -> no emit
+            [("srcA", i * 10, i) for i in range(5)],
+            # b3: h above every kept hash, set full -> rejected, no emit
+            [("srcA", 99_999, 99)],
+            # b4: h below the min -> displaces the max kept pair, emits upd=2
+            [("srcA", 1, 77)],
+        ]
+    _write_replay(
+        tmp_path / "src", batches, [(key, pa.string())] + [(c, pa.int64()) for c in cols]
+    )
+    df = (
+        spark.readStream.schema(", ".join([f"{key} string"] + [f"{c} long" for c in cols]))
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "src"))
+    )
+    name = "kfirstchg" + uuid.uuid4().hex[:8]
+    _run_k_first(df, key, cols, k, name, str(tmp_path / "ckpt"))
+    emitted = spark.table(name).collect()
+    upds = sorted({r["upd"] for r in emitted})
+    # b2/b3 were no-ops: only the saturating fill and the b4 insert emitted
+    assert upds == [1, 2], upds
+    per_upd = {u: sorted(tuple(r[c] for c in cols) for r in emitted if r["upd"] == u) for u in upds}
+    assert len(per_upd[1]) == k and len(per_upd[2]) == k
+    seen = sorted({r[1:] for b in batches for r in b})
+    assert per_upd[2][0] == seen[0]              # the minimum is always kept
+    assert batches[3][0][1:] in per_upd[2]       # the displacing row got kept
+    displaced = sorted({r[1:] for r in batches[0]})[k - 1]  # b1's old max kept row
+    assert displaced in per_upd[1] and displaced not in per_upd[2]
+    assert batches[2][0][1:] not in per_upd[2]   # the rejected row never entered
+    assert {r["full"] for r in emitted} == {1}
+    # compaction view (latest upd per key) is bounded by keys x k
+    assert len(per_upd[max(upds)]) <= 1 * k
+    # and the raw changelog grew by exactly the changed snapshots
+    assert len(emitted) == 2 * k
+
+
+@pytest.mark.parametrize("dated", [True, False], ids=["date_key", "string_key"])
+def test_k_first_stream_expires_closed_days(spark, tmp_path, dated):
+    """A ``DateType`` key arms the event-time timeout: once the
+    watermark passes a day's end plus the 1-day grace, the day's state
+    row is removed (without emitting), also when the day's last call
+    left its set unchanged. A string key of the same days keeps its
+    state."""
+    import datetime as dt
+    import uuid
+
+    import pyarrow as pa
+
+    day1 = dt.datetime(2024, 1, 1, 12)
+    day10 = dt.datetime(2024, 1, 10, 12)
+    batches = [
+        [(day1, h) for h in range(1, 11)],  # fill day 1 past k
+        [(day1, h) for h in range(1, 6)],  # re-send duplicates: set unchanged
+        [(day10, 7)],  # a day 9 days later moves the watermark past day 1
+        [(day10, 7)],  # the batch that sees that watermark
+    ]
+    _write_replay(tmp_path / "src", batches, [("ts", pa.timestamp("us", tz="UTC")), ("h", pa.int64())])
+    raw = (
+        spark.readStream.schema("ts timestamp, h long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(tmp_path / "src"))
+        .withWatermark("ts", "1 day")
+    )
+    d = F.to_date("ts") if dated else F.date_format("ts", "yyyy-MM-dd")
+    df = raw.select("ts", d.alias("d"), "h")
+    name = "kfirstexp" + uuid.uuid4().hex[:8]
+    q = _run_k_first(df, "d", ["h"], 4, name, str(tmp_path / "ckpt"))
+    total, removed = _state_rows(q), _state_rows(q, "numRowsRemoved")
+    assert len(total) >= len(batches)
+    assert max(total) == 2
+    if dated:
+        assert sum(removed) >= 1, removed
+        assert total[-1] == 1, total
+    else:
+        assert sum(removed) == 0, removed
+        assert total[-1] == 2, total
+    # each day emitted its kept set once; neither duplicates nor the expiry emitted
+    emitted = spark.table(name).collect()
+    assert sorted(str(r["d"]) for r in emitted) == ["2024-01-01"] * 4 + ["2024-01-10"]
+    assert {r["upd"] for r in emitted} == {1}
 
 
 def test_stale_temp_dir_sweep(tmp_path):
@@ -431,88 +644,6 @@ def test_stale_temp_dir_sweep(tmp_path):
     assert fresh.exists() and other.exists()
 
 
-def test_flow_overlap_kmv_bounded_state_matches_batch(spark, tables):
-    """The set-sketch twin's state must be one state-store row per
-    event type (each ≤ K longs), and the poll-time pair algebra over
-    the latest snapshot must equal the batch overlap sketch exactly
-    (the K-smallest set is arrival-order independent)."""
-    import json
-    import uuid
-
-    from gmall_realtime_ck_spark.operators.relational import (
-        _H44_SPARK,
-        KMV_K,
-        approx_overlap_kmv,
-    )
-
-    ev = pipelines.events_file_stream(spark, SF_DIR)
-    dh = ev.select(F.col("event_type").alias("tp"), F.expr(_H44_SPARK).alias("h"))
-    name = "kmvset" + uuid.uuid4().hex[:8]
-    ckpt = pipelines._process_tempdir("ckpt_")
-    q = (
-        state.kmv_set_sketch_stream(dh, KMV_K)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_types = tables["events"].select("event_type").distinct().count()
-    state_rows = max(
-        sum(s.get("numRowsTotal", 0) for s in json.loads(p.json).get("stateOperators") or [])
-        for p in q.recentProgress
-    )
-    assert 0 < state_rows <= n_types, (state_rows, n_types)
-    emitted = spark.table(name)
-    per_upd = emitted.groupBy("tp", "upd").count()
-    assert per_upd.agg(F.max("count")).first()[0] <= KMV_K
-
-    got = sorted(map(tuple, pipelines.flow_overlap_kmv(spark, SF_DIR).collect()))
-    want = sorted(map(tuple, approx_overlap_kmv(tables).collect()))
-    assert got == want
-
-
-def test_kmv_merge_property_matches_set_model():
-    """Property (hypothesis, no Spark): for ANY hash sequence, ANY
-    batch boundaries, and ANY k, folding _kmv_merge over the batches
-    yields exactly the k smallest distinct hashes, with the saturation
-    flag ≡ (distinct count > k). This is the state transition both KMV
-    streaming twins share — arrival order and batching must be
-    invisible."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from gmall_realtime_ck_spark.streaming.state import _kmv_decode, _kmv_merge
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(st.integers(min_value=0, max_value=40), max_size=60),
-        st.integers(min_value=1, max_value=10),
-        st.randoms(use_true_random=False),
-    )
-    def check(seq, k, rng):
-        # random batch boundaries over a random permutation
-        rng.shuffle(seq)
-        cur, sat = _kmv_decode(""), 0
-        i = 0
-        while i < len(seq):
-            j = i + rng.randint(1, max(1, len(seq) - i))
-            cur, sat = _kmv_merge(
-                cur, np.array(seq[i:j], dtype="int64"), k, sat
-            )
-            i = j
-        distinct = sorted(set(seq))
-        assert cur.tolist() == distinct[:k]
-        assert sat == (1 if len(distinct) > k else 0)
-        # round-trip through the state-store string encoding
-        assert _kmv_decode(",".join(map(str, cur.tolist()))).tolist() == distinct[:k]
-
-    check()
-
-
 def test_stale_sweep_spares_recently_active_checkpoint(tmp_path):
     """A >1h-old checkpoint whose commits/ subdir is still being
     written (a live long-running query in another process) must NOT be
@@ -536,77 +667,6 @@ def test_stale_sweep_spares_recently_active_checkpoint(tmp_path):
     removed = pipelines._sweep_stale_temp_dirs(tmp_root=str(tmp_path), max_age_s=3600)
     assert removed == 1
     assert live.exists() and not dead.exists()
-
-
-def test_kmv_set_sketch_emits_only_on_change(spark, tmp_path):
-    """Output-contract pin (VERDICT r7 #6): kmv_set_sketch_stream is a
-    CHANGELOG — a micro-batch that does not change a key's K-smallest
-    set (duplicate hashes, or hashes above a full set's max) must emit
-    NOTHING for that key, a batch that does change it must emit a new
-    ``upd`` snapshot, and the latest-``upd``-wins compaction view is
-    always ≤ keys × K rows."""
-    import os
-    import time
-    import uuid
-
-    from gmall_realtime_ck_spark.operators.relational import KMV_K
-
-    src = tmp_path / "src"
-    src.mkdir()
-    batches = [
-        # b1: fills + saturates the sketch (100 distinct > K)
-        [("a", h) for h in range(1, 101)],
-        # b2: pure duplicates -> sketch unchanged, must emit nothing
-        [("a", h) for h in range(1, 51)],
-        # b3: hash above the full set's max -> rejected, emit nothing
-        [("a", 10_000)],
-        # b4: hash below the min -> sketch changes, must emit upd=2
-        [("a", 0)],
-    ]
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    now = time.time() - 60
-    for i, rows in enumerate(batches):
-        p = str(src / f"b{i}.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "tp": pa.array([r[0] for r in rows], pa.string()),
-                    "h": pa.array([r[1] for r in rows], pa.int64()),
-                }
-            ),
-            p,
-        )
-        os.utime(p, (now + i, now + i))  # force source file order
-
-    dh = (
-        spark.readStream.schema("tp string, h long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    name = "kmvchg" + uuid.uuid4().hex[:8]
-    q = (
-        state.kmv_set_sketch_stream(dh, KMV_K)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table(name).collect()
-    upds = sorted({r["upd"] for r in emitted})
-    # b2/b3 were no-ops: only the saturating fill and the b4 insert emitted
-    assert upds == [1, 2], upds
-    per_upd = {u: [r["h"] for r in emitted if r["upd"] == u] for u in upds}
-    assert len(per_upd[1]) == KMV_K and len(per_upd[2]) == KMV_K
-    assert min(per_upd[2]) == 0 and 10_000 not in per_upd[2]
-    # compaction view (latest upd per key) is bounded by keys x K
-    assert len(per_upd[max(upds)]) <= 1 * KMV_K
-    # and the raw changelog grew by exactly the changed snapshots
-    assert len(emitted) == 2 * KMV_K
 
 
 def test_stale_sweep_handles_symlink_entries(tmp_path):
@@ -637,160 +697,6 @@ def test_stale_sweep_handles_symlink_entries(tmp_path):
     assert removed == 2
     assert not broken.exists() and not aliased.exists()
     assert fresh_target.exists()
-
-
-def test_flow_domain_cap_bounded_state_matches_batch(spark, tables):
-    """The domain-cap twin's state must be one state-store row per
-    source (each holding ≤ 2·CAP longs — never the source's documents),
-    and the poll-time rank over the latest snapshot must equal the
-    batch quota exactly (the CAP-first set under (h, doc_id) is
-    arrival-order independent)."""
-    import json
-    import uuid
-
-    from gmall_realtime_ck_spark.operators.sampling import (
-        DOMAIN_CAP,
-        sample_domain_cap,
-    )
-    from gmall_realtime_ck_spark.operators.text import H28_SPARK
-
-    docs = pipelines.documents_file_stream(spark, SF_DIR)
-    sh = docs.select(
-        "source", F.expr(H28_SPARK.format(c="text")).alias("h"), "doc_id"
-    )
-    name = "domcap" + uuid.uuid4().hex[:8]
-    ckpt = pipelines._process_tempdir("ckpt_")
-    q = (
-        state.domain_cap_stream(sh, DOMAIN_CAP)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_sources = tables["documents"].select("source").distinct().count()
-    state_rows = max(
-        sum(s.get("numRowsTotal", 0) for s in json.loads(p.json).get("stateOperators") or [])
-        for p in q.recentProgress
-    )
-    assert 0 < state_rows <= n_sources, (state_rows, n_sources)
-    emitted = spark.table(name)
-    per_upd = emitted.groupBy("source", "upd").count()
-    assert per_upd.agg(F.max("count")).first()[0] <= DOMAIN_CAP
-
-    got = sorted(map(tuple, pipelines.flow_domain_cap(spark, SF_DIR).collect()))
-    want = sorted(map(tuple, sample_domain_cap(tables).collect()))
-    assert got == want
-
-
-def test_pair_merge_property_matches_set_model():
-    """Property (hypothesis, no Spark): folding _pair_merge over ANY
-    batching/permutation of (h, doc_id) pairs — duplicates included —
-    yields exactly the K lexicographically-first DISTINCT pairs. The
-    law flow_domain_cap's bounded state rests on."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from gmall_realtime_ck_spark.streaming.state import _kmv_decode, _pair_merge
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=8),
-                st.integers(min_value=0, max_value=30),
-            ),
-            max_size=60,
-        ),
-        st.integers(min_value=1, max_value=10),
-        st.randoms(use_true_random=False),
-    )
-    def check(pairs, k, rng):
-        rng.shuffle(pairs)
-        cur_h, cur_d = _kmv_decode(""), _kmv_decode("")
-        i = 0
-        while i < len(pairs):
-            j = i + rng.randint(1, 7)
-            bh = np.array([p[0] for p in pairs[i:j]], dtype="int64")
-            bd = np.array([p[1] for p in pairs[i:j]], dtype="int64")
-            cur_h, cur_d = _pair_merge(cur_h, cur_d, bh, bd, k)
-            i = j
-        want = sorted(set(pairs))[:k]
-        assert list(zip(cur_h.tolist(), cur_d.tolist())) == want
-
-    check()
-
-
-def test_domain_cap_emits_only_on_change(spark, tmp_path):
-    """domain_cap_stream shares kmv_set_sketch_stream's changelog
-    contract: a micro-batch of already-kept or above-the-cut pairs
-    emits nothing; a batch that displaces a kept doc emits a fresh
-    ``upd`` snapshot of ≤ CAP rows."""
-    import os
-    import time
-    import uuid
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from gmall_realtime_ck_spark.operators.sampling import DOMAIN_CAP
-
-    src = tmp_path / "src"
-    src.mkdir()
-    batches = [
-        # b1: 40 docs with h = doc_id*10 -> keeps the CAP smallest
-        [("srcA", i * 10, i) for i in range(40)],
-        # b2: replay of already-kept pairs -> no emit
-        [("srcA", i * 10, i) for i in range(5)],
-        # b3: h above every kept hash, set full -> rejected, no emit
-        [("srcA", 99_999, 99)],
-        # b4: h below the min -> displaces the max kept pair, emits upd=2
-        [("srcA", 1, 77)],
-    ]
-    now = time.time() - 60
-    for i, rows in enumerate(batches):
-        p = str(src / f"b{i}.parquet")
-        pq.write_table(
-            pa.table(
-                {
-                    "source": pa.array([r[0] for r in rows], pa.string()),
-                    "h": pa.array([r[1] for r in rows], pa.int64()),
-                    "doc_id": pa.array([r[2] for r in rows], pa.int64()),
-                }
-            ),
-            p,
-        )
-        os.utime(p, (now + i, now + i))
-
-    sh = (
-        spark.readStream.schema("source string, h long, doc_id long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    name = "domchg" + uuid.uuid4().hex[:8]
-    q = (
-        state.domain_cap_stream(sh, DOMAIN_CAP)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table(name).collect()
-    upds = sorted({r["upd"] for r in emitted})
-    assert upds == [1, 2], upds
-    per_upd = {u: sorted((r["h"], r["doc_id"]) for r in emitted if r["upd"] == u) for u in upds}
-    assert len(per_upd[1]) == DOMAIN_CAP and len(per_upd[2]) == DOMAIN_CAP
-    assert (1, 77) in per_upd[2]             # the displacing pair got kept
-    displaced = ((DOMAIN_CAP - 1) * 10, DOMAIN_CAP - 1)  # b1's old max kept pair
-    assert displaced in per_upd[1] and displaced not in per_upd[2]
-    assert (99_999, 99) not in per_upd[2]    # the rejected pair never entered
-    assert len(emitted) == 2 * DOMAIN_CAP    # b2/b3 emitted nothing
 
 
 def test_compact_latest_snapshot_history_invariance(spark):
